@@ -93,67 +93,66 @@ _MODULES = (
 # driver-row freshness, never test coverage. Per-round tail rationale lives
 # in git history (see `git log __spark_entry__.py`).
 _WINDOW = (
-    # (b) r16: plans MATERIALLY restructured this optimization round — must
-    # re-gate. The CC family's loop width became purely state-derived, the
-    # star variant gained the caller-keyed edge registry and _large_star
-    # lost its intermediate distinct (every connected_components consumer
-    # re-gates); the Lloyd/k-means trainings moved to per-round jobs with
-    # literal memoized codebooks/centroids; reachability's edge list is
-    # localCheckpointed ahead of the recursion:
-    "sim_ivfpq_lloyd_topk",
-    "dedup_cluster_cc_star",
+    # (b) r17: plans MATERIALLY restructured — must re-gate. Every
+    # connected_components consumer: the min-label and star loops fire one
+    # job per round (observe-folded convergence probes, no round-0
+    # checkpoint) over a coalesced edge leaf from the edge registry;
+    # graph_pagerank_trade dropped its per-round checkpoint and joins the
+    # out-degree into the persisted edge table once:
     "dedup_cluster_cc",
+    "dedup_cluster_cc_star",
     "dedup_cluster_cc_bounded",
     "dedup_cluster_cc_capped",
     "dedup_cluster_best",
     "dedup_cluster_report",
-    "corpus_build_full",
-    "corpus_leakage_safe_split",
     "text_entity_ids",
     "ml_semantic_keepers",
-    "graph_reachability_nations",
-    "ml_kmeans_refine",
-    "dedup_semantic_kmeans",
-    "ml_hard_negatives",
-    # (a) the staleness queue oldest-first — the 22 remaining r11 rows
-    # (ml_hard_negatives, also r11, re-gates above as a changed row):
-    "ev_approx_distinct_users",
-    "ev_approx_value_quantiles",
-    "ev_mode_value",
-    "ev_pivot_type_counts",
-    "ev_rollup_daily",
-    "ev_running_total",
-    "text_decontaminate",
-    "text_lm_score",
-    "text_ngram_novelty",
-    "text_repetition_score",
-    "text_subword_tokens",
-    "text_tfidf_top_terms",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_parts",
-    "tpch_q13_outer_join",
-    "tpch_q17_small_qty",
-    "tpch_q1_pricing_summary",
-    "tpch_q21_sole_returner",
-    "tpch_q22_anti_join",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    # (a) the 13 stalest r12 rows, ledger order; the remaining r12 rows are
-    # the r17 carry, inside the size-derived rotation contract:
-    "corpus_cdc_chunk",
-    "corpus_dsir_sample",
-    "corpus_filter_cascade",
-    "corpus_hash_sample",
-    "corpus_mixture_sample",
-    "corpus_quality_report",
-    "corpus_shuffle_shards",
-    "corpus_source_cap",
-    "corpus_split_assign",
-    "corpus_stratified_predlang",
-    "corpus_token_budget",
-    "dq_events_drift",
-    "ev_click_streaks",
+    "corpus_leakage_safe_split",
+    "corpus_build_full",
+    "graph_pagerank_trade",
+    # (a) the staleness queue oldest-first — the 29 remaining r12 rows
+    # (graph_pagerank_trade, also r12, re-gates above as a changed row):
+    "ev_cube_type_dow",
+    "ev_funnel_steps",
+    "ev_gapfill_hourly",
+    "ev_hll_daily_rollup",
+    "ev_json_extract_sum",
+    "ev_kmv_distinct_users",
+    "ev_markov_transitions",
+    "ev_retention_cohorts",
+    "ev_sliding_1h_value",
+    "ev_theta_user_overlap",
+    "ev_value_outliers",
+    "ev_variant_stats",
+    "ev_winsorized_stats",
+    "sim_ann_lsh",
+    "sim_ivf_multiprobe",
+    "sim_ivfpq_residual_topk",
+    "sim_ivfpq_topk",
+    "sim_ivfpq_wide_topk",
+    "sim_knn_classify",
+    "sim_topk_bruteforce",
+    "t11_median_order_total_by_band_year",
+    "t4_top_priority_per_nation",
+    "t_unpivot_nation_stats",
+    "text_bpe_tokens",
+    "text_normalize",
+    "text_quality_classifier",
+    "tpch_full_outer_nation_coverage",
+    "tpch_q2_min_cost_supplier",
+    "user_clean_pipeline",
+    # (a) the 10 stalest r13 rows, ledger order; the remaining r13 rows are
+    # the r18 carry, inside the size-derived rotation contract:
+    "corpus_bm25_search",
+    "corpus_pack_sequences",
+    "corpus_span_corruption",
+    "corpus_zorder_keys",
+    "dq_orders_constraints",
+    "dq_profile_drift",
+    "ev_asof_click_before_purchase",
+    "ev_attribution_multitouch",
+    "ev_cm_top_users",
+    "ev_division_all_types",
 )
 
 

@@ -26,7 +26,7 @@ import functools
 import operator
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 
 from ..data import load_table, plan_identity, shielded_sort
 from ..functions import text as T
@@ -715,135 +715,138 @@ ORDER BY n_match
 CC_JACCARD_THRESHOLD = 0.97
 CC_MAX_ROUNDS = 20
 
-# Bounded registry of plan-keyed persisted edge DataFrames (ADVICE r14):
+# Bounded registry of the CC loops' edge relations (ADVICE r14):
 # insertion-ordered, oldest-unpersisted-on-overflow. 16 distinct
 # (corpus, threshold, cap) edge plans comfortably covers a session's
 # working set; each entry is kilobytes-to-megabytes of verified pairs.
-# value: (persisted edge DataFrame, n_edges). The row count rides along
-# (r15): it is plan-determined, and re-counting a cache-hit materialization
-# cost a full job per consumer execution (~0.35 s/rep at sf0.1).
-_EDGE_PLAN_CACHE: dict[tuple, tuple[DataFrame, int]] = {}
+# value: (persisted edge DataFrame, n_edges, loop leaf). The row count
+# rides along (r15): it is plan-determined, and re-counting a cache-hit
+# materialization cost a full job per consumer execution (~0.35 s/rep at
+# sf0.1).
+_EDGE_PLAN_CACHE: dict[tuple, tuple[DataFrame, int, DataFrame]] = {}
 _EDGE_PLAN_CACHE_MAX = 16
 
 
-def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
+def _loop_width(n_edges: int) -> int:
+    """Shuffle width of a CC loop's rounds and partition count of its edge
+    leaf: one partition per ~1M edges, purely state-derived (r16).
+
+    Every round materializes on the AQE-less RDD path, so nothing coalesces
+    a wide round after the fact: at the session's full width each round
+    paid wide-stage scheduling regardless of data volume (1.3 s/round on a
+    71k-edge graph), and the old defaultParallelism floor re-widened
+    kilobyte states to one task per core (~0.3 s of scheduling per stage;
+    a 35k-edge star round read 4.3 s at width 32 vs 1.9 s at width 1-4;
+    scanning the 32-partition persisted union cost ~0.1 s per round).
+
+    Callers cap it with the session's spark.sql.shuffle.partitions, the
+    operator's scale knob; it binds only past conf x 1M edges. Measured at
+    sf0.1, the largest CC edge set is 71,212 edges (dedup_cluster_cc):
+    width 1. A session left at the 200-partition default runs a 10 B-edge
+    loop at 200 partitions (~50 M edges each) until the conf is raised."""
+    return n_edges // 1_000_000 + 1
+
+
+def _registered_edges(edge_key: tuple, edges: DataFrame) -> tuple[DataFrame, int]:
+    """(leaf, n_edges): the relation a CC loop's rounds join against, from
+    the bounded registry under ``edge_key``.
+
+    A miss materializes ``edges`` with persist + a SQL-path count, NOT a
+    localCheckpoint: the RDD-path materialization skips AQE, so the
+    swapped union branch lost exchange reuse and recomputed the full
+    upstream a second time (measured 8.2 s vs 2.3 s for one pass at
+    sf0.1). The persisted rows are then copied once into a coalesced
+    localCheckpoint — the leaf — so a round plans against one small RDD
+    scan instead of the full upstream lineage through the CacheManager.
+    Cluster equivalent: persist(DISK_ONLY) + checkpoint().
+
+    Deliberately never unpersisted except by eviction (r14, the VERDICT
+    r13 #4 constant): the persist is plan-keyed in Spark's CacheManager,
+    so a SIBLING consumer of the same pair stream (dedup_cluster_best and
+    dedup_cluster_cc_capped both consume capped_verified_pairs at the
+    same cap/threshold) reuses the materialized edges instead of
+    re-paying the full LSH-verify pipeline, which was ~80% of
+    dedup_cluster_best's per-rep cost (4.4 of 5.5 s at sf0.1). Same policy
+    as the graph family's edge caches (f1228d5); growth is bounded by the
+    oldest-out eviction."""
+    hit = _EDGE_PLAN_CACHE.get(edge_key)
+    if hit is None:
+        edges = edges.persist()
+        n_edges = edges.count()
+        leaf = edges.coalesce(_loop_width(n_edges)).localCheckpoint()
+        if len(_EDGE_PLAN_CACHE) >= _EDGE_PLAN_CACHE_MAX:
+            _EDGE_PLAN_CACHE.pop(next(iter(_EDGE_PLAN_CACHE)))[0].unpersist()
+        hit = _EDGE_PLAN_CACHE[edge_key] = (edges, n_edges, leaf)
+    return hit[2], hit[1]
+
+
+def connected_components(
+    nodes: DataFrame, pairs: DataFrame, edge_key: tuple | None = None
+) -> DataFrame:
     """Min-label propagation over an undirected pair list.
 
     nodes: one column `node` (any orderable id); pairs: two columns naming
     the two endpoints (column names don't matter — positions do). Returns
     (node, label) where label = min node id in the connected component.
     See dedup_cluster_cc's docstring for the scale rationale.
-    """
+
+    ``edge_key`` names the pair stream in the edge registry; by default it
+    is the plan digest of the symmetric edge list (data.plan_identity). A
+    caller that can name its stream cheaply passes its own key and skips
+    the digest (~0.055 s per call on the LSH pairs)."""
     a, b = pairs.columns
     sym = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
     edges = sym.union(
         sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    # Materialize once: every round re-reads the edge list, and without this
-    # each round would re-run the upstream plan (here: the whole LSH join).
-    # persist + a SQL-path count, NOT localCheckpoint: the RDD-path
-    # materialization skips AQE, so the swapped union branch lost exchange
-    # reuse and recomputed the full upstream a second time (measured 8.2s vs
-    # 2.3s for one pass at sf0.1). Cluster equivalent: persist(DISK_ONLY).
-    # The persisted plans live in a BOUNDED plan-keyed registry (ADVICE
-    # r14): one entry per distinct edge plan, oldest unpersisted on
-    # overflow, mirroring the attestation-memo discipline — a long-lived
-    # multi-corpus session can no longer grow storage unboundedly, while
-    # the r14 CacheManager-reuse win (sibling consumers of the same pair
-    # stream share one materialization) is untouched for the registry's
-    # working set.
-    from ..data import plan_identity
-
-    app_id = nodes.sparkSession.sparkContext.applicationId
-    edge_key = (app_id, plan_identity(edges))
-    cached = _EDGE_PLAN_CACHE.get(edge_key)
-    if cached is not None:
-        edges, n_edges = cached
-        sl = edges.storageLevel
-        if not (sl.useMemory or sl.useDisk):
-            # a session-wide clearCache (bench.py between queries) dropped
-            # the materialization but not the registry entry — re-pin, or
-            # every later build in the session would run permanently cold
-            edges.persist()
-        # n_edges is plan-determined: reusing the recorded count skips one
-        # full job per cache-hit execution (r15)
-    else:
-        edges = edges.persist()
-        n_edges = edges.count()
-        if len(_EDGE_PLAN_CACHE) >= _EDGE_PLAN_CACHE_MAX:
-            _EDGE_PLAN_CACHE.pop(next(iter(_EDGE_PLAN_CACHE)))[0].unpersist()
-        _EDGE_PLAN_CACHE[edge_key] = (edges, n_edges)
-    labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint()
-
-    def checksum(df: DataFrame):
-        # decimal(38,0) so the convergence checksum can't overflow a long
-        # even at 10^10 nodes with 2^40-sized ids
-        return df.agg(F.sum(F.col("label").cast("decimal(38,0)")).alias("s")).first()["s"]
-
     spark = nodes.sparkSession
-    # Scope the loop's shuffle width to its state size: each round's
-    # label-propagation join carries O(|V|+|E|) rows, and the per-round
-    # localCheckpoint materializes on the RDD path where AQE can't coalesce
-    # — with the session's full shuffle width every round pays a
-    # wide-stage scheduling cost regardless of data volume (measured
-    # 1.3s/round on a 71k-edge graph). ~1M edges per partition, PURELY
-    # state-derived (r16): the old defaultParallelism floor re-widened
-    # kilobyte loop states to one task per core — measured ~0.3 s of
-    # scheduling per stage on a 35k-edge graph (a star round 4.3 s at
-    # width 32 vs 1.9 s at width 1-4) and the r15 driver's 8-core run was
-    # FASTER than 32-core on exactly these rows. At real scale the
-    # size-derived term dominates and nothing changes. Restored in
-    # finally (no session-level mutation survives).
+    if edge_key is None:
+        edge_key = (spark.sparkContext.applicationId, plan_identity(edges))
+    edges, n_edges = _registered_edges(edge_key, edges)
+    # Round 0's labels are a projection of the node scan: nothing to
+    # materialize. Each round is ONE job — its localCheckpoint carries the
+    # convergence probe as an Observation of the summed old and new labels
+    # (decimal(38,0): no long overflow even at 10^10 nodes with 2^40-sized
+    # ids). The left join keeps one row per node and new <= old on every
+    # row, so equal sums <=> no label moved <=> converged.
+    labels = nodes.select("node", F.col("node").alias("label"))
     shuffle_key = "spark.sql.shuffle.partitions"
     old_parts = spark.conf.get(shuffle_key)
-    loop_parts = int(n_edges // 1_000_000) + 1
-    prev_sum = checksum(labels)
-    converged = False
     try:
-        spark.conf.set(shuffle_key, str(min(int(old_parts), loop_parts)))
+        width = min(int(old_parts), _loop_width(n_edges))
+        spark.conf.set(shuffle_key, str(width))
         for _ in range(CC_MAX_ROUNDS):
             nmin = edges.join(labels, edges.src == labels.node).groupBy("dst").agg(
                 F.min("label").alias("nlabel")
             )
+            probe = Observation()
             labels = (
                 labels.join(nmin, labels.node == nmin.dst, "left")
                 .select(
                     "node",
+                    F.col("label").alias("old"),
                     F.least(
                         F.col("label"), F.coalesce("nlabel", "label")
                     ).alias("label"),
                 )
+                .observe(
+                    probe,
+                    F.sum(F.col("old").cast("decimal(38,0)")).alias("old"),
+                    F.sum(F.col("label").cast("decimal(38,0)")).alias("new"),
+                )
+                .select("node", "label")
                 .localCheckpoint()
             )
-            cur_sum = checksum(labels)
-            if cur_sum == prev_sum:
-                converged = True
-                break
-            prev_sum = cur_sum
+            sums = probe.get
+            if sums["old"] == sums["new"]:
+                return labels
     finally:
-        spark.conf.set(shuffle_key, old_parts)
-        # Deliberately NOT unpersisted (r14, the VERDICT r13 #4 constant):
-        # the persisted edge list is plan-keyed in Spark's CacheManager,
-        # so a rebuilt IDENTICAL edge plan — the next execution of the
-        # same query, or a SIBLING consumer of the same pair stream
-        # (dedup_cluster_best and dedup_cluster_cc_capped both consume
-        # capped_verified_pairs at the same cap/threshold) — reuses the
-        # materialized edges instead of re-paying the full LSH-verify
-        # pipeline, which instrumentation showed was ~80% of
-        # dedup_cluster_best's per-rep cost (4.4 of 5.5 s at sf0.1; the
-        # CC loop itself converges in 2 rounds over 2,102 edges). Same
-        # policy and same measured-revert history as the graph family's
-        # edge caches (pagerank/k_core/label_propagation, f1228d5);
-        # caches are capped-linear in corpus size, kilobytes here.
-        # Session-lifetime growth is bounded by _EDGE_PLAN_CACHE's
-        # oldest-out eviction above (ADVICE r14).
-    if not converged:
-        # Round cap hit without converging: the graph has a long-diameter
-        # component (min-label needs O(diameter) rounds). Hand off to the
-        # alternating-star algorithm, which converges in O(log² n) rounds
-        # regardless of diameter — correctness never silently degrades.
-        return connected_components_star(nodes, pairs)
-    return labels
+        spark.conf.set(shuffle_key, old_parts)  # no session-level mutation
+    # Round cap hit without converging: the graph has a long-diameter
+    # component (min-label needs O(diameter) rounds). Hand off to the
+    # alternating-star algorithm, which converges in O(log² n) rounds
+    # regardless of diameter — correctness never silently degrades.
+    return connected_components_star(nodes, edges)
 
 
 STAR_MAX_ROUNDS = 40  # alternating-star is O(log² n): 40 covers any real n
@@ -910,57 +913,53 @@ def connected_components_star(
 
     Each round is two codegen'd groupBy+join passes over the edge set, which
     SHRINKS toward one star edge per non-min node — unlike label
-    propagation, whose per-round work stays O(|V|+|E|) for every round. The
-    convergence probe collects one (count, hash-sum) row per round; edges
-    localCheckpoint per round to break lineage (cluster equivalent:
-    persist + checkpoint).
+    propagation, whose per-round work stays O(|V|+|E|) for every round.
+    Each round is one job: the edges localCheckpoint to break lineage
+    (cluster equivalent: persist + checkpoint), and the convergence probe
+    — a (count, hash-sum) of the round's edges — rides on that checkpoint
+    as an Observation.
 
     ``edge_key``, when given by a caller that can name its pair stream
-    cheaply (r16, VERDICT r15 #2): the INITIAL canonical edge set is
-    persisted in the bounded _EDGE_PLAN_CACHE under that key — the same
-    plan-keyed-persist policy connected_components has carried since r14
-    (capped-linear planning state; a cache-hit execution skips re-paying
-    the upstream LSH-verify materialization, a cache-miss or post-
-    clearCache execution computes it from the parquet inputs). The r15
-    attempt at this cache keyed on plan_identity(edges) and LOST its A/B
-    because digesting the huge LSH plan per call cost more than the
-    rebuild; the caller-supplied key makes the lookup free."""
+    cheaply (r16, VERDICT r15 #2): the INITIAL canonical edge set comes
+    from the bounded edge registry under that key (_registered_edges;
+    a cache-hit execution skips re-paying the upstream LSH-verify
+    materialization). The r15 attempt at this cache keyed on
+    plan_identity(edges) and LOST its A/B because digesting the huge LSH
+    plan per call cost more than the rebuild; the caller-supplied key
+    makes the lookup free."""
     spark = nodes.sparkSession
+    if edge_key is not None:
+        edges, n_edges = _registered_edges(edge_key, _canon_edges(pairs))
+    else:
+        size = Observation()
+        edges = (
+            _canon_edges(pairs)
+            .observe(size, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint()
+        )
+        n_edges = size.get["n"]
     shuffle_key = "spark.sql.shuffle.partitions"
     old_parts = spark.conf.get(shuffle_key)
-    cached = _EDGE_PLAN_CACHE.get(edge_key) if edge_key is not None else None
-    if cached is not None:
-        edges, n_edges = cached
-        sl = edges.storageLevel
-        if not (sl.useMemory or sl.useDisk):
-            # a session-wide clearCache dropped the materialization but not
-            # the registry entry — re-pin (connected_components' policy)
-            edges.persist()
-    elif edge_key is not None:
-        edges = _canon_edges(pairs).persist()
-        n_edges = edges.count()
-        if len(_EDGE_PLAN_CACHE) >= _EDGE_PLAN_CACHE_MAX:
-            _EDGE_PLAN_CACHE.pop(next(iter(_EDGE_PLAN_CACHE)))[0].unpersist()
-        _EDGE_PLAN_CACHE[edge_key] = (edges, n_edges)
-    else:
-        edges = _canon_edges(pairs).localCheckpoint()
-        n_edges = edges.count()
-    # Same scoped loop-width pin as connected_components: star rounds
-    # checkpoint on the AQE-less RDD path, so per-round stage width must
-    # track the (shrinking) edge state, not the session's scan width
-    # (purely state-derived since r16 — see connected_components).
-    loop_parts = int(n_edges // 1_000_000) + 1
     prev: tuple | None = None
     try:
-        spark.conf.set(shuffle_key, str(min(int(old_parts), loop_parts)))
+        # the same scoped, state-derived loop width as connected_components
+        width = min(int(old_parts), _loop_width(n_edges))
+        spark.conf.set(shuffle_key, str(width))
         for _ in range(STAR_MAX_ROUNDS):
-            edges = _small_star(_large_star(edges)).localCheckpoint()
-            row = edges.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.sum(F.xxhash64("hi", "lo").cast("decimal(38,0)")), F.lit(0)
-                ).alias("s"),
-            ).first()
+            probe = Observation()
+            edges = (
+                _small_star(_large_star(edges))
+                .observe(
+                    probe,
+                    F.count(F.lit(1)).alias("n"),
+                    F.coalesce(
+                        F.sum(F.xxhash64("hi", "lo").cast("decimal(38,0)")),
+                        F.lit(0),
+                    ).alias("s"),
+                )
+                .localCheckpoint()
+            )
+            row = probe.get
             cur = (row["n"], row["s"])
             if cur == prev:  # fixed point: every edge is (member → component min)
                 break
@@ -996,14 +995,16 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
       round k replans rounds 1..k-1 and the job graph grows quadratically.
       (On a cluster: `persist(DISK_ONLY)` + `checkpoint()` to survive
       executor loss; localCheckpoint is the single-JVM equivalent.)
-    - The driver-side loop collects ONE row per round (a label checksum —
-      sum(label) is monotone non-increasing, so equal sums ⇔ converged);
-      the label table itself never leaves the executors.
+    - **One job per round**: the convergence probe (summed old and new
+      labels — new <= old per node, so equal sums ⇔ converged) rides on
+      the round's checkpoint as an Observation; the label table itself
+      never leaves the executors. Rounds join against a coalesced edge
+      leaf from the edge registry, named by this caller (no plan digest).
     - Result is the exact min-reachable-id labeling — independent of
       iteration order, hence deterministic and oracle-checkable (DuckDB
       recursive CTE computes the same closure).
     """
-    return _cluster_cc(spark, sf_dir, connected_components)
+    return _cluster_cc(spark, sf_dir, connected_components, "cc_edges")
 
 
 def dedup_cluster_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1012,32 +1013,25 @@ def dedup_cluster_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle (both produce the exact min-reachable-id labeling), O(log² n)
     rounds regardless of component diameter. Gated separately so the star
     implementation carries its own full value-hash correctness check, not
-    just the property tests.
-
-    The star edge set is registered under a CHEAP caller-named key (r16):
-    re-paying the full LSH-verify materialization per execution was the
-    round-15 bench's biggest row (7.7 s driver), and the r15-rejected
-    plan_identity key was the whole cost of that A/B loss."""
-    edge_key = (
-        spark.sparkContext.applicationId,
-        "star_edges",
-        sf_dir,
-        CC_JACCARD_THRESHOLD,
-    )
-    return _cluster_cc(
-        spark,
-        sf_dir,
-        lambda nodes, pairs: connected_components_star(nodes, pairs, edge_key),
-    )
+    just the property tests."""
+    return _cluster_cc(spark, sf_dir, connected_components_star, "star_edges")
 
 
-def _cluster_cc(spark: SparkSession, sf_dir: str, cc_fn) -> DataFrame:
+def _cluster_cc(
+    spark: SparkSession, sf_dir: str, cc_fn, edge_tag: str
+) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = _lsh_verified_pairs(spark, sf_dir, CC_JACCARD_THRESHOLD).select(
         "doc_a", "doc_b"
     )
     nodes = docs.select(F.col("doc_id").alias("node"))
-    labels = cc_fn(nodes, pairs)
+    # A CHEAP caller-named registry key (r16): re-paying the full
+    # LSH-verify materialization per execution was the round-15 bench's
+    # biggest row (7.7 s driver), and a plan_identity key cost the star
+    # variant its r15 A/B. The tag keeps the two loops' edge formats apart.
+    app_id = spark.sparkContext.applicationId
+    edge_key = (app_id, edge_tag, sf_dir, CC_JACCARD_THRESHOLD)
+    labels = cc_fn(nodes, pairs, edge_key)
     return (
         labels.select(
             F.col("node").alias("doc_id"),

@@ -23,9 +23,10 @@ driver's bitwise value gate applies.
 edge list on src + one grouped sum on dst — both shuffles keyed on node
 ids. The edge list is the big table and its partitioning is REUSED across
 rounds (it is hash-repartitioned on src once, outside the loop, and each
-round's join re-uses that exchange); the rank table is |V| rows. Lineage
-grows linearly in rounds; the loop localCheckpoints the rank table every
-round (the CC lineage-break idiom) so T rounds never re-execute round 0.
+round's join re-uses that exchange); the rank table is |V| rows. With a
+fixed, small round count each rank table is consumed exactly once, so the
+unrolled plan stays linear in rounds without a per-round checkpoint: the
+whole computation is ONE AQE-planned action and the builder fires no job.
 """
 
 from __future__ import annotations
@@ -55,30 +56,29 @@ def pagerank(edges: DataFrame, rounds: int = PR_ROUNDS) -> DataFrame:
 
     e = edges.select("src", "dst").distinct()
     # materialize the (big) edge table ONCE, already partitioned on the
-    # join key: every round's join reads the persisted src-partitioned
-    # blocks instead of re-running the upstream join + distinct (without
-    # the persist, T rounds pay T upstream executions — measured 2.9x on
-    # the trade graph at sf0.1: 8.4 s -> 2.9 s)
+    # join key and carrying each src's out-degree: every round's join reads
+    # the persisted src-partitioned (src, dst, d) blocks instead of
+    # re-running the upstream join + distinct (without the persist, T
+    # rounds pay T upstream executions — measured 2.9x on the trade graph
+    # at sf0.1: 8.4 s -> 2.9 s). persist is lazy: the query's one action
+    # fills it, and later executions of the same plan reuse it.
     par = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    e = e.repartition(par, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    ranks = deg.select(
-        F.col("src").alias("node"), F.lit(PR_FP).cast("long").alias("pr")
-    )
-    for _ in range(rounds):
-        # Join strategy deliberately left to the planner (r15 A/B, guide
-        # §3.1): deg/ranks carry small known stats, so these joins already
-        # elect broadcast/efficient builds — a forced shuffle_hash measured
-        # neutral (2.21 vs 2.10 s median) and a hint would pin the choice
-        # at scale. Contrast label_propagation, whose checkpoint-backed
-        # label side has unknown stats and NEEDS the hint.
-        contrib = (
-            e.join(deg, "src")
-            .join(ranks, F.col("src") == F.col("node"))
-            .select("dst", F.expr("pr div d").alias("c"))
-        )
+    e = e.repartition(par, "src")
+    ed = e.join(
+        e.groupBy("src").agg(F.count(F.lit(1)).alias("d")), "src"
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # pr_0 = FP on every node (each is a src), so round 1 needs no rank join
+    contrib = ed.select("dst", F.expr(f"{PR_FP}L div d").alias("c"))
+    for r in range(rounds):
+        if r:
+            # Join strategy deliberately left to the planner (r15 A/B,
+            # guide §3.1): the rank side carries small known stats, so the
+            # join already elects a broadcast/efficient build — a forced
+            # shuffle_hash measured neutral (2.21 vs 2.10 s median) and a
+            # hint would pin the choice at scale.
+            contrib = ed.join(ranks, F.col("src") == F.col("node")).select(
+                "dst", F.expr("pr div d").alias("c")
+            )
         ranks = (
             contrib.groupBy("dst")
             .agg(F.sum("c").alias("s"))
@@ -88,7 +88,6 @@ def pagerank(edges: DataFrame, rounds: int = PR_ROUNDS) -> DataFrame:
                     f"{PR_BASE}L + ({PR_DAMP_NUM}L * s) div {PR_DAMP_DEN}"
                 ).alias("pr"),
             )
-            .localCheckpoint()  # lineage break per round (the CC idiom)
         )
     # Deliberately NOT unpersisted (r13, measured): Spark's CacheManager
     # keys cached data by LOGICAL PLAN, so re-executions of this query

@@ -780,6 +780,43 @@ def test_cc_star_on_long_path_graph(spark):
     assert got_fallback == expected
 
 
+def test_cc_observe_probes_terminate_on_degenerate_graphs(spark):
+    """Both CC loops read their convergence probe from an Observation on
+    the round's checkpoint, and Observation.get blocks until an action
+    delivers its metrics. Degenerate graphs must still deliver them and
+    converge with label == node: no nodes at all (the label sums are NULL
+    on both sides), nodes with an empty pair list, and a graph already at
+    its fixed point (self-loops only). Each call runs under a time bound,
+    so a probe that never arrives fails the test instead of hanging it."""
+    import threading
+
+    from pinterest_data_pipeline218_spark.operators.dedup import (
+        connected_components,
+        connected_components_star,
+    )
+
+    cases = {
+        "no nodes": ([], []),
+        "no pairs": ([3, 5, 8], []),
+        "self-loops only": ([3, 5, 8], [(3, 3), (8, 8)]),
+    }
+    for case, (ids, edges) in cases.items():
+        nodes = spark.createDataFrame([(v,) for v in ids], "node long")
+        pairs = spark.createDataFrame(edges, "a long, b long")
+        for cc in (connected_components, connected_components_star):
+            out = []
+            worker = threading.Thread(
+                target=lambda: out.append(
+                    {r.node: r.label for r in cc(nodes, pairs).collect()}
+                ),
+                daemon=True,
+            )
+            worker.start()
+            worker.join(timeout=180)
+            assert not worker.is_alive(), f"{cc.__name__} hung on {case}"
+            assert out == [{v: v for v in ids}], f"{cc.__name__}: {case}"
+
+
 def test_cc_star_matches_union_find_on_random_graphs(spark):
     """Property: star CC labels equal a driver-side union-find ground truth
     on seeded random graphs (mix of singletons, small clusters, chains)."""

@@ -1138,29 +1138,22 @@ def test_registry_window_names_resolve_and_rotation_is_ledger_mechanical(qs):
     }
     out = (stale | new_unwindowed) - set(window)
     assert out == set(), f"stale/new queries outside the checked window: {out}"
-    # changed since last driver row (r15-judge..r16 commits) — must
-    # re-gate: the CC family's state-derived loop width + star edge
-    # registry + _large_star distinct removal (every connected_components
-    # consumer), the literal memoized Lloyd codebook / k-means centroids,
-    # and reachability's pre-recursion localCheckpoint. The r16 load_table
-    # memo adds only a Project the optimizer collapses (plan-identical);
-    # the r15 changed set (shielded sorts etc.) re-gated in r15.
+    # changed since last driver row (r16 rows, changed in r17): every
+    # connected_components consumer (one job per loop round over a
+    # coalesced edge leaf, observe-folded convergence probes) and
+    # graph_pagerank_trade (checkpoint-free fixed rounds).
     changed = {
-        "sim_ivfpq_lloyd_topk",
-        "dedup_cluster_cc_star",
         "dedup_cluster_cc",
+        "dedup_cluster_cc_star",
         "dedup_cluster_cc_bounded",
         "dedup_cluster_cc_capped",
         "dedup_cluster_best",
         "dedup_cluster_report",
-        "corpus_build_full",
-        "corpus_leakage_safe_split",
         "text_entity_ids",
         "ml_semantic_keepers",
-        "graph_reachability_nations",
-        "ml_kmeans_refine",
-        "dedup_semantic_kmeans",
-        "ml_hard_negatives",
+        "corpus_leakage_safe_split",
+        "corpus_build_full",
+        "graph_pagerank_trade",
     }
     out = changed - set(window)
     assert out == set(), f"changed queries outside the checked window: {out}"
@@ -1290,6 +1283,23 @@ def test_cc_loop_restores_shuffle_partitions(spark):
     }
     assert got_star == got
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_iterative_builders_fire_one_job_per_round(spark, qs):
+    """Builder SQL executions of a warm call, read from the SQL status
+    store (the tools/buildtime.py hook). dedup_cluster_cc converges in 2
+    min-label rounds at sf0.01 and fires exactly one job per round: round
+    0's labels are not materialized and each convergence probe rides on
+    its round's checkpoint. graph_pagerank_trade fires none: its fixed
+    rounds run inside the query's own action."""
+    from tools.buildtime import last_sql_execution
+
+    sf = "/root/testdata/sf0.01"
+    for name, want in (("dedup_cluster_cc", 2), ("graph_pagerank_trade", 0)):
+        qs[name](spark, sf)  # cold call: fills the edge registry
+        before = last_sql_execution(spark)
+        qs[name](spark, sf)
+        assert last_sql_execution(spark) - before == want, name
 
 
 def test_lm_score_model_joins_hint_free_and_pruned(spark, qs):

@@ -4,7 +4,10 @@ DataFrame take (pure driver/py4j plan-graph build, no action)?
 A Spark action inside a builder or a huge Column-algebra chain is re-paid on
 every bench rep (bench.py calls the builder per rep), so builder time is
 real bench time. This sweep names the rows worth the F.expr / builder-memo
-treatment (guide §5 "the driver should do almost no data work").
+treatment (guide §5 "the driver should do almost no data work"). Next to
+each build time it prints how many SQL executions the builder fired, read
+from Spark's SQL status store: on the first (cold) build, which fills the
+memos, and on the timed (warm) builds.
 
 Usage:
     python tools/buildtime.py                # all registry queries, 2 reps
@@ -38,20 +41,38 @@ def main() -> None:
     spark = get_spark()
     out = []
     for n in names:
-        qs[n](spark, sf_dir)  # warm-up build (imports, first-touch caches)
-        best = min(
-            _timed(qs[n], spark, sf_dir) for _ in range(reps)
-        )
-        out.append((best, n))
+        # warm-up build (imports, first-touch caches, memo fills)
+        _, cold = _timed(qs[n], spark, sf_dir)
+        runs = [_timed(qs[n], spark, sf_dir) for _ in range(reps)]
+        best, warm = min(runs)
+        out.append((best, warm, cold, n))
     out.sort(reverse=True)
-    for t, n in out:
-        print(f"BUILD {t:7.3f}s {n}")
+    for t, warm, cold, n in out:
+        print(f"BUILD {t:7.3f}s sql {warm:2d} (cold {cold:2d}) {n}")
 
 
-def _timed(fn, spark, sf_dir) -> float:
+def last_sql_execution(spark) -> int:
+    """Id of the newest SQL execution in the session's status store, -1
+    before the first. Ids only grow, so the difference of two readings
+    counts the executions between them even after the store has evicted
+    old ones (spark.sql.ui.retainedExecutions caps executionsCount)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    while n := store.executionsCount():
+        newest = store.executionsList(n - 1, 1)
+        # empty only if an eviction ran between the two reads: read again
+        if newest.nonEmpty():
+            return newest.head().executionId()
+    return -1
+
+
+def _timed(fn, spark, sf_dir) -> tuple[float, int]:
+    """(seconds, SQL executions) of one builder call."""
+    e0 = last_sql_execution(spark)
     t0 = time.monotonic()
     fn(spark, sf_dir)
-    return time.monotonic() - t0
+    dt = time.monotonic() - t0
+    return dt, last_sql_execution(spark) - e0
 
 
 if __name__ == "__main__":
