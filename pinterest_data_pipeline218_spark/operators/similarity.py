@@ -51,13 +51,18 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double_array("embedding").alias("v")
     )
+    # vec_id is unique, so the filter leaves at most one row; a global
+    # aggregate makes the bound PROVABLE (logical maxRows=1), turning the
+    # nested-loop join into an asserted 1-row broadcast in the plan audit,
+    # and `n > 0` keeps a missing query vector an empty side. Not
+    # limit(1): Spark 4.1 names each limit operator's generated row
+    # counter from a JVM-wide sequence, so a limit's codegen stage
+    # compiles anew on every execution.
     query = (
         emb.filter(F.col("vec_id") == QUERY_VEC_ID)
-        .select(F.col("v").alias("q"))
-        # vec_id is unique, so this is already one row; limit(1) makes the
-        # bound PROVABLE (logical maxRows=1), turning the nested-loop join
-        # into an asserted 1-row broadcast in the plan audit
-        .limit(1)
+        .agg(F.first("v").alias("q"), F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > 0)
+        .select("q")
     )
     return (
         emb.filter(F.col("vec_id") != QUERY_VEC_ID)

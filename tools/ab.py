@@ -3,7 +3,10 @@
 Times named registry queries inside ONE warm Spark session with the noop
 sink, interleaving reps across queries so host-contention drift hits every
 variant equally (the BASELINE.md §2 discipline: never compare across
-sessions). Prints per-query reps + median; exits nonzero on unknown names.
+sessions). Prints per-query reps + median, and the generated classes each
+rep compiled: a warm rep that compiles classes times Janino and the JIT,
+not the query (cache thrash, or a plan whose generated code differs per
+execution). Exits nonzero on unknown names.
 
 Usage:
     python tools/ab.py q1 q2 ...            # default 5 reps
@@ -21,7 +24,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
-from pinterest_data_pipeline218_spark.session import get_spark  # noqa: E402
+from pinterest_data_pipeline218_spark.session import (  # noqa: E402
+    codegen_compiles,
+    get_spark,
+)
 
 
 def force(df) -> None:
@@ -41,6 +47,7 @@ def main() -> None:
         sys.exit(2)
     spark = get_spark()
     times: dict[str, list[float]] = {n: [] for n in names}
+    compiles: dict[str, list[int]] = {n: [] for n in names}
     for n in names:  # one untimed warm-up each (codegen/JIT)
         spark.sparkContext.setJobDescription(f"ab-warmup:{n}")
         force(qs[n](spark, sf_dir))
@@ -51,15 +58,17 @@ def main() -> None:
         seq = names if r % 2 == 0 else list(reversed(names))
         for n in seq:
             spark.sparkContext.setJobDescription(f"ab:{n}:rep{r}")
-            t0 = time.monotonic()
+            c0, t0 = codegen_compiles(spark), time.monotonic()
             force(qs[n](spark, sf_dir))
             times[n].append(time.monotonic() - t0)
+            compiles[n].append(codegen_compiles(spark) - c0)
     print()
     for n in names:
         ts = times[n]
         print(
             f"AB {n}: median={statistics.median(ts):.3f}s "
-            f"min={min(ts):.3f} reps={['%.3f' % t for t in ts]}"
+            f"min={min(ts):.3f} reps={['%.3f' % t for t in ts]} "
+            f"compiles={compiles[n]}"
         )
 
 

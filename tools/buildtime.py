@@ -6,8 +6,10 @@ every bench rep (bench.py calls the builder per rep), so builder time is
 real bench time. This sweep names the rows worth the F.expr / builder-memo
 treatment (guide §5 "the driver should do almost no data work"). Next to
 each build time it prints how many SQL executions the builder fired, read
-from Spark's SQL status store: on the first (cold) build, which fills the
-memos, and on the timed (warm) builds.
+from Spark's SQL status store, and how many generated classes those
+executions compiled (Spark's CodegenMetrics): on the first (cold) build,
+which fills the memos, and on the timed (warm) builds. A warm build that
+compiles classes is timing Janino, not the builder.
 
 Usage:
     python tools/buildtime.py                # all registry queries, 2 reps
@@ -24,7 +26,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
-from pinterest_data_pipeline218_spark.session import get_spark  # noqa: E402
+from pinterest_data_pipeline218_spark.session import (  # noqa: E402
+    codegen_compiles,
+    get_spark,
+)
 
 
 def main() -> None:
@@ -42,13 +47,16 @@ def main() -> None:
     out = []
     for n in names:
         # warm-up build (imports, first-touch caches, memo fills)
-        _, cold = _timed(qs[n], spark, sf_dir)
+        _, cold, cold_cg = _timed(qs[n], spark, sf_dir)
         runs = [_timed(qs[n], spark, sf_dir) for _ in range(reps)]
-        best, warm = min(runs)
-        out.append((best, warm, cold, n))
+        best, warm, warm_cg = min(runs)
+        out.append((best, warm, cold, warm_cg, cold_cg, n))
     out.sort(reverse=True)
-    for t, warm, cold, n in out:
-        print(f"BUILD {t:7.3f}s sql {warm:2d} (cold {cold:2d}) {n}")
+    for t, warm, cold, warm_cg, cold_cg, n in out:
+        print(
+            f"BUILD {t:7.3f}s sql {warm:2d} (cold {cold:2d}) "
+            f"compiles {warm_cg:3d} (cold {cold_cg:3d}) {n}"
+        )
 
 
 def last_sql_execution(spark) -> int:
@@ -66,13 +74,13 @@ def last_sql_execution(spark) -> int:
     return -1
 
 
-def _timed(fn, spark, sf_dir) -> tuple[float, int]:
-    """(seconds, SQL executions) of one builder call."""
-    e0 = last_sql_execution(spark)
+def _timed(fn, spark, sf_dir) -> tuple[float, int, int]:
+    """(seconds, SQL executions, compiled classes) of one builder call."""
+    e0, c0 = last_sql_execution(spark), codegen_compiles(spark)
     t0 = time.monotonic()
     fn(spark, sf_dir)
     dt = time.monotonic() - t0
-    return dt, last_sql_execution(spark) - e0
+    return dt, last_sql_execution(spark) - e0, codegen_compiles(spark) - c0
 
 
 if __name__ == "__main__":
