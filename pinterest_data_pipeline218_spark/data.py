@@ -10,6 +10,7 @@ pushdown then happen for free at the source (verify with
 from __future__ import annotations
 
 import os
+import time
 import weakref
 
 import pyspark.sql.functions as F
@@ -31,43 +32,91 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Memo of loaded LAZY table plans, per live SparkSession (r16, guide §5):
-# `spark.read.parquet` re-resolves the source per call — file listing +
-# footer/schema inference through py4j, measured ~110-135 ms per call on
-# this host — and the bench harness pays it per table per rep for all 207
-# queries (the single largest driver-tax line of the r16 builder sweep:
-# ~90 s of cumulative builder time, roughly half of it load_table).
-# Stores only the lazy DataFrame (no data, no results — every action still
-# computes from the parquet inputs); callers get a fresh select("*")
-# wrapper so physical planning stays per-action under the CURRENT session
-# conf (the _memo_plan discipline in operators/dedup.py). Keys carry the
-# file's mtime+size (the on-disk IVF index convention), so a rewritten
-# fixture misses the memo instead of serving a stale file listing; the
-# WeakKeyDictionary drops entries with their session, which also keeps a
-# sibling spark.newSession() from inheriting plans resolved under another
-# session's conf (ADVICE r15).
-_LOAD_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+# One planning-state memo per live SparkSession: namespace -> (entries,
+# counters). The WeakKeyDictionary drops a session's entries with it.
+_SESSION_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
-_LOAD_MEMO_MAX = 64  # distinct (sf_dir, table, stat) per session
+MEMO_MAX = 32  # entries per namespace; the largest in a registry sweep holds 10
+
+
+def session_memo(spark: SparkSession, namespace: str, key, build, on_evict=None):
+    """``build()``'s value, computed once per (live session, namespace, key).
+
+    This is the package's one memo of query-PLANNING state: lazy plans
+    whose construction costs py4j time (table scans, the LSH builders),
+    and the kilobyte results of planning actions a builder fires (trained
+    centroids and merge tables, collision and cap attestations, the CC
+    edge registry). A Spark action inside a builder is re-paid on every
+    execution of the query, so it is paid once per session instead. No
+    row of any query's output is stored: every action still computes from
+    the inputs.
+
+    - Scope: one live session. A sibling ``spark.newSession()`` shares
+      the SparkContext but starts empty, so it is never served a plan
+      analyzed under another session's conf or state.
+    - Keys: a caller-named tuple, or ``plan_identity(df)`` for a value
+      derived from a plan. Never ``id()`` (a recycled id revives a dead
+      object's entry) nor ``semanticHash`` (32 bits: two plans can
+      collide into one verdict).
+    - Data immutability: a plan key sees the input PATHS, not their
+      contents, so a value stays valid while the files under a key do not
+      change within the session, the convention of Spark's own table and
+      statistics caches. Keys of inputs that are rewritten in place
+      carry the file's on-disk stamp (``load_table``, the IVF centroids).
+    - Eviction: when a namespace holds ``MEMO_MAX`` entries the oldest is
+      dropped, and ``on_evict(value)`` runs on it (the edge registry
+      unpersists its edge set there).
+    - Counters: hits, misses and seconds spent in ``build`` per
+      namespace, read with ``memo_stats``.
+    """
+    per = _SESSION_MEMO.setdefault(spark, {})
+    entries, stats = per.setdefault(
+        namespace, ({}, {"hits": 0, "misses": 0, "build_s": 0.0})
+    )
+    if key in entries:
+        stats["hits"] += 1
+        return entries[key]
+    stats["misses"] += 1
+    t0 = time.perf_counter()
+    value = build()
+    stats["build_s"] += time.perf_counter() - t0
+    if len(entries) >= MEMO_MAX:
+        evicted = entries.pop(next(iter(entries)))
+        if on_evict is not None:
+            on_evict(evicted)
+    entries[key] = value
+    return value
+
+
+def memo_stats(spark: SparkSession) -> dict[str, dict]:
+    """{namespace: {"hits", "misses", "build_s"}} of ``spark``'s memo."""
+    return {
+        ns: dict(stats) for ns, (_, stats) in _SESSION_MEMO.get(spark, {}).items()
+    }
+
+
+def file_stamp(path: str) -> tuple[int, int] | None:
+    """(mtime_ns, size) of ``path``, None when it does not exist: a memo
+    key that misses once the file or directory is rewritten in place."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = os.stat(path)
-        stat_key = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        stat_key = None
-    per = _LOAD_MEMO.setdefault(spark, {})
-    key = (sf_dir, name, stat_key)
-    got = per.get(key)
-    if got is None:
-        got = _load_table_build(spark, sf_dir, name)
-        if len(per) >= _LOAD_MEMO_MAX:
-            per.pop(next(iter(per)))
-        per[key] = got
-    return got.select("*")
+    """The lazy scan of ``{sf_dir}/{name}.parquet``. ``spark.read.parquet``
+    re-lists the source and infers its footer schema through py4j (~120 ms
+    a call), so the plan is memoized per file stamp. Callers get a fresh
+    ``select("*")``: a Dataset caches its QueryExecution, and the stored
+    object would freeze the physical plan under the conf of its first
+    action."""
+    key = (sf_dir, name, file_stamp(os.path.join(sf_dir, f"{name}.parquet")))
+    return session_memo(
+        spark, "load", key, lambda: _load_table_build(spark, sf_dir, name)
+    ).select("*")
 
 
 def _load_table_build(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -125,32 +174,17 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[st
     return dfs
 
 
-# Literal (collected-values) relations, memoized per live SparkSession
-# (r16): a trained-planning-state table (Lloyd codebook, k-means
-# centroids) embedded via spark.createDataFrame gets a FRESH RDD identity
-# on every call, so every downstream plan digest (plan_identity) and
-# CacheManager plan key changes per execution — ml_semantic_keepers'
-# edge registry missed on every rep and re-paid its pair materialization
-# (A/B 2.0 -> 3.4 s) until the relation object was made stable. Returning
-# the SAME DataFrame object is safe here because it is a leaf relation
-# over immutable collected values: there is no physical plan beneath it
-# that a session-conf flip could re-shape (contrast _memo_plan's fresh
-# select('*') discipline for composite plans).
-_LITERAL_DF_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-_LITERAL_DF_MEMO_MAX = 64
-
-
 def literal_df(spark: SparkSession, key: tuple, rows: list, schema: str) -> DataFrame:
-    per = _LITERAL_DF_MEMO.setdefault(spark, {})
-    df = per.get(key)
-    if df is None:
-        df = spark.createDataFrame(rows, schema)
-        if len(per) >= _LITERAL_DF_MEMO_MAX:
-            per.pop(next(iter(per)))
-        per[key] = df
-    return df
+    """One session-stable DataFrame over collected planning-state values
+    (a trained codebook, k-means centroids). A fresh ``createDataFrame``
+    per call mints a new RDD identity, so every consumer's plan_identity
+    and CacheManager key would change per execution (ml_semantic_keepers'
+    edge registry then missed on every run: 2.0 -> 3.4 s). The same object
+    is returned, not a ``select("*")``: a leaf over literal values has no
+    physical plan beneath it for a conf change to re-shape."""
+    return session_memo(
+        spark, "literal_relation", key, lambda: spark.createDataFrame(rows, schema)
+    )
 
 
 def shielded_sort(df: DataFrame, *cols: str) -> DataFrame:
@@ -178,12 +212,14 @@ def plan_identity(df: DataFrame) -> str:
     canonicalized. Raw exprIds (`doc_id#123`) are allocation-order
     globals, so two builds of the SAME query differ textually — the same
     reason DataFrame.semanticHash() normalizes them; lambda variables
-    (`lambda x_7#id`) carry a second global counter in the NAME itself.
-    Renumbering each distinct `#n` exprId and each `x_n#` lambda name in
-    first-occurrence order keeps semantically-identical plans equal
-    (attestation memos still hit across bench reps) while remaining a
-    full-plan digest, not a 32-bit one (ADVICE r13: two different plans
-    must never share a memoized attestation verdict)."""
+    (`lambda x_7#id`, `lambda y_8#id`) carry a second global counter in
+    the NAME itself: PySpark names each parameter of a Python lambda
+    `{param}_{n}` from one process-wide counter. Renumbering each
+    distinct `#n` exprId and each lambda name in first-occurrence order
+    keeps semantically-identical plans equal (attestation memos still hit
+    across bench reps) while remaining a full-plan digest, not a 32-bit
+    one (ADVICE r13: two different plans must never share a memoized
+    attestation verdict)."""
     import hashlib
     import re
 
@@ -193,15 +229,17 @@ def plan_identity(df: DataFrame) -> str:
     def canon(m: re.Match) -> str:
         return seen.setdefault(m.group(0), f"@c{len(seen)}")
 
-    # x_n only when attribute-named (followed by #) — Spark's fresh
-    # lambda-variable scheme; then #n exprIds in ATTRIBUTE context only
+    # `{param}_n` only as a lambda variable (`lambda ` before, `#` after;
+    # matching `x_n` alone left a two-parameter lambda's `y_n` changing
+    # the digest of every build: ml_semantic_keepers' edge registry missed
+    # on each execution); then #n exprIds in ATTRIBUTE context only
     # (ADVICE r14): an exprId's '#' is always glued to the last char of
     # its attribute name (`value#3`, `sum(value)#45`), while a string
     # LITERAL rendering like '#1' is preceded by the expression-level
     # delimiter — space, '(', '[' or ',' — so requiring a non-delimiter
     # lookbehind keeps plans differing only in such a literal from
     # canonicalizing to the same digest.
-    plan = re.sub(r"\bx_\d+(?=#)", canon, plan)
+    plan = re.sub(r"(?<=lambda )\w+_\d+(?=#)", canon, plan)
     plan = re.sub(r"(?<=[^\s(\[,])#\d+", canon, plan)
     # An in-memory relation's string rendering shows only its SCHEMA,
     # never its rows, so two different in-memory datasets of the same

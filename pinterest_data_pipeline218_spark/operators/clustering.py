@@ -32,7 +32,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..data import load_table, shielded_sort
+from ..data import literal_df, load_table, plan_identity, session_memo, shielded_sort
 from ..functions.vectors import as_double_array
 
 K_CLUSTERS = 8
@@ -86,23 +86,17 @@ def _update(comps: DataFrame, assign: DataFrame) -> DataFrame:
     )
 
 
-# Session-scoped memo of the TRAINED k-means centroid values (r16 — the
+# Trained k-means centroid values, memoized per emb plan (r16, the
 # sim_ivfpq_lloyd_topk / BPE-merge-table discipline, guide §5). The
 # unrolled 2-round formulation re-embedded every earlier round's
 # assignment subtree in the final plan, and FOUR gated queries
 # (ml_kmeans_refine, dedup_semantic_kmeans, ml_hard_negatives,
 # ml_semantic_keepers) each re-derived the identical training per
-# execution. The centroids are <= K_CLUSTERS·dim rows of small integers —
-# kilobytes of trained planning state; first build per session computes
-# from the parquet inputs via per-round jobs over ONE localCheckpointed
-# component stream, numerically identical integer arithmetic round by
-# round (the DuckDB oracle's chained CTEs are unchanged, gate stays
-# bitwise).
-# Data-immutability assumption (ADVICE r15, documented): plan_identity
-# sees the emb PLAN, not file contents — the standing convention that
-# sf_dir's parquet is immutable for the application's lifetime.
-_KM_CENT_MEMO: dict[tuple, list] = {}
-_KM_CENT_MEMO_MAX = 16
+# execution. The centroids are <= K_CLUSTERS·dim rows of small integers;
+# the first build per session computes them from the parquet inputs via
+# per-round jobs over ONE localCheckpointed component stream, numerically
+# identical integer arithmetic round by round (the DuckDB oracle's chained
+# CTEs are unchanged, gate stays bitwise).
 _KM_CENT_SCHEMA = "cluster bigint, pos int, c bigint"
 
 
@@ -110,16 +104,10 @@ def _trained_centroids(
     emb: DataFrame, comps: DataFrame, rounds: int = KM_ROUNDS
 ) -> DataFrame:
     """Lloyd-refined centroids as a literal (cluster, pos, c) relation."""
-    from ..data import plan_identity
-
     spark = emb.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        plan_identity(emb),
-        rounds,
-    )
-    got = _KM_CENT_MEMO.get(key)
-    if got is None:
+    key = (plan_identity(emb), rounds)
+
+    def build():
         cps = comps.localCheckpoint()
         # Seed from the K lowest vec_ids BY RANK (TakeOrdered + broadcast),
         # not `vec_id < K` — on corpora whose ids aren't 0-based contiguous
@@ -137,14 +125,12 @@ def _trained_centroids(
             cent = spark.createDataFrame(got, _KM_CENT_SCHEMA)
             rows = _update(cps, _assign(cps, cent)).collect()
             got = [(r["cluster"], r["pos"], r["c"]) for r in rows]
-        if len(_KM_CENT_MEMO) >= _KM_CENT_MEMO_MAX:
-            _KM_CENT_MEMO.pop(next(iter(_KM_CENT_MEMO)))
-        _KM_CENT_MEMO[key] = got
+        return got
+
+    got = session_memo(spark, "kmeans_centroids", key, build)
     # a per-session STABLE relation object: a fresh createDataFrame per
     # call would change every consumer's plan digest per execution and
     # defeat the CC edge registry / CacheManager reuse (see data.literal_df)
-    from ..data import literal_df
-
     return literal_df(spark, key, got, _KM_CENT_SCHEMA)
 
 

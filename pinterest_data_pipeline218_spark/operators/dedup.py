@@ -28,7 +28,7 @@ import operator
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 
-from ..data import load_table, plan_identity, shielded_sort
+from ..data import load_table, plan_identity, session_memo, shielded_sort
 from ..functions import text as T
 from ..functions.vectors import (
     as_double_array,
@@ -186,45 +186,14 @@ def _verify_sides(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     return x, y
 
 
-# Session-scoped memo of the two heavy pair-stream BUILDERS' lazy plans
-# (r15). Constructing the LSH pipeline's DataFrame graph costs ~0.7 s of
-# pure driver/py4j time per call (hundreds of Column expressions), paid by
-# EVERY consumer execution — cluster_cc/cc_star/minhash_lsh each rebuild
-# an identical plan per bench rep. The memo stores the LAZY DataFrame
-# keyed per live SparkSession (WeakKeyDictionary since r16, ADVICE r15:
-# a sibling spark.newSession() shares the applicationId but must not be
-# served plans whose analysis ran under another session's state) plus
-# (builder, sf_dir, params): no data, no results — every action still
-# computes from the parquet inputs; DataFrames are immutable so sharing
-# the object across consumers is safe, and the plan-keyed
-# persist/attestation caches see the identical plan they already key on.
-# Bounded like the edge registry. Data-immutability assumption (ADVICE
-# r15, documented): the key does not see file CONTENTS — the standing
-# convention that sf_dir's parquet is immutable for the application's
-# lifetime (the driver starts a fresh JVM per run).
-import weakref
-
-_BUILDER_PLAN_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-_BUILDER_PLAN_MEMO_MAX = 32  # per session
-
-
 def _memo_plan(spark: SparkSession, key: tuple, build) -> DataFrame:
-    per = _BUILDER_PLAN_MEMO.setdefault(spark, {})
-    got = per.get(key)
-    if got is None:
-        got = build()
-        if len(per) >= _BUILDER_PLAN_MEMO_MAX:
-            per.pop(next(iter(per)))
-        per[key] = got
-    # hand back a FRESH Dataset over the memoized logical plan: a Dataset
-    # caches its QueryExecution, so returning the stored object verbatim
-    # would freeze the PHYSICAL plan under whatever session conf was active
-    # at first build (test_minhash_lsh_has_no_forced_corpus_broadcast flips
-    # autoBroadcastJoinThreshold and re-plans). select("*") is one cheap
-    # node the optimizer collapses; planning stays per-action, as before.
-    return got.select("*")
+    """The lazy plan of a heavy pair-stream builder, built once per session:
+    the LSH pipeline's hundreds of Column expressions cost ~0.7 s of py4j
+    per build, and cluster_cc, cc_star and minhash_lsh share one plan.
+    Returned as a fresh ``select("*")`` (see data.load_table):
+    test_minhash_lsh_has_no_forced_corpus_broadcast flips
+    autoBroadcastJoinThreshold and must see the plan re-planned."""
+    return session_memo(spark, "builder_plan", key, build).select("*")
 
 
 def _lsh_verified_pairs(
@@ -715,18 +684,6 @@ ORDER BY n_match
 CC_JACCARD_THRESHOLD = 0.97
 CC_MAX_ROUNDS = 20
 
-# Bounded registry of the CC loops' edge relations (ADVICE r14):
-# insertion-ordered, oldest-unpersisted-on-overflow. 16 distinct
-# (corpus, threshold, cap) edge plans comfortably covers a session's
-# working set; each entry is kilobytes-to-megabytes of verified pairs.
-# value: (persisted edge DataFrame, n_edges, loop leaf). The row count
-# rides along (r15): it is plan-determined, and re-counting a cache-hit
-# materialization cost a full job per consumer execution (~0.35 s/rep at
-# sf0.1).
-_EDGE_PLAN_CACHE: dict[tuple, tuple[DataFrame, int, DataFrame]] = {}
-_EDGE_PLAN_CACHE_MAX = 16
-
-
 def _loop_width(n_edges: int) -> int:
     """Shuffle width of a CC loop's rounds and partition count of its edge
     leaf: one partition per ~1M edges, purely state-derived (r16).
@@ -747,9 +704,13 @@ def _loop_width(n_edges: int) -> int:
     return n_edges // 1_000_000 + 1
 
 
-def _registered_edges(edge_key: tuple, edges: DataFrame) -> tuple[DataFrame, int]:
+def _registered_edges(
+    edge_key: tuple | str, edges: DataFrame
+) -> tuple[DataFrame, int]:
     """(leaf, n_edges): the relation a CC loop's rounds join against, from
-    the bounded registry under ``edge_key``.
+    the session memo's edge registry under ``edge_key``. The edge count
+    is stored with it: re-counting a cache-hit materialization cost a
+    full job per consumer execution (~0.35 s at sf0.1).
 
     A miss materializes ``edges`` with persist + a SQL-path count, NOT a
     localCheckpoint: the RDD-path materialization skips AQE, so the
@@ -768,16 +729,22 @@ def _registered_edges(edge_key: tuple, edges: DataFrame) -> tuple[DataFrame, int
     re-paying the full LSH-verify pipeline, which was ~80% of
     dedup_cluster_best's per-rep cost (4.4 of 5.5 s at sf0.1). Same policy
     as the graph family's edge caches (f1228d5); growth is bounded by the
-    oldest-out eviction."""
-    hit = _EDGE_PLAN_CACHE.get(edge_key)
-    if hit is None:
-        edges = edges.persist()
-        n_edges = edges.count()
-        leaf = edges.coalesce(_loop_width(n_edges)).localCheckpoint()
-        if len(_EDGE_PLAN_CACHE) >= _EDGE_PLAN_CACHE_MAX:
-            _EDGE_PLAN_CACHE.pop(next(iter(_EDGE_PLAN_CACHE)))[0].unpersist()
-        hit = _EDGE_PLAN_CACHE[edge_key] = (edges, n_edges, leaf)
-    return hit[2], hit[1]
+    oldest-out eviction, which unpersists."""
+
+    def build():
+        persisted = edges.persist()
+        n_edges = persisted.count()
+        leaf = persisted.coalesce(_loop_width(n_edges)).localCheckpoint()
+        return persisted, n_edges, leaf
+
+    _, n_edges, leaf = session_memo(
+        edges.sparkSession,
+        "edge_registry",
+        edge_key,
+        build,
+        on_evict=lambda hit: hit[0].unpersist(),
+    )
+    return leaf, n_edges
 
 
 def connected_components(
@@ -801,7 +768,7 @@ def connected_components(
     )
     spark = nodes.sparkSession
     if edge_key is None:
-        edge_key = (spark.sparkContext.applicationId, plan_identity(edges))
+        edge_key = plan_identity(edges)
     edges, n_edges = _registered_edges(edge_key, edges)
     # Round 0's labels are a projection of the node scan: nothing to
     # materialize. Each round is ONE job — its localCheckpoint carries the
@@ -1029,8 +996,7 @@ def _cluster_cc(
     # LSH-verify materialization per execution was the round-15 bench's
     # biggest row (7.7 s driver), and a plan_identity key cost the star
     # variant its r15 A/B. The tag keeps the two loops' edge formats apart.
-    app_id = spark.sparkContext.applicationId
-    edge_key = (app_id, edge_tag, sf_dir, CC_JACCARD_THRESHOLD)
+    edge_key = (edge_tag, sf_dir, CC_JACCARD_THRESHOLD)
     labels = cc_fn(nodes, pairs, edge_key)
     return (
         labels.select(
@@ -1834,33 +1800,6 @@ def _cont_hashed(shs_df: DataFrame) -> DataFrame:
     ).drop("shs")
 
 
-# Attestation results keyed by (Spark application id, logical plan): the
-# same corpus plan within one application always reads the same immutable
-# files, so the proof is reusable — exactly how an engine caches ANALYZE
-# statistics per table version. Without this, every re-execution of a
-# containment query would re-pay the linear attestation scan (~6 s at
-# sf0.1, measured r13), negating the hash-path win it enables. The
-# applicationId key (not id(session) — review r13: a recycled object id
-# could revive a dead session's proof) is unique per SparkContext; the
-# plan key is the MD5 of the full ANALYZED PLAN STRING, not
-# DataFrame.semanticHash() — semanticHash is a 32-bit digest, so two
-# different corpus plans in one application could collide and silently
-# reuse the wrong verdict, skipping the string-set verify on an
-# unattested corpus (ADVICE r13 medium). MD5-of-plan is
-# collision-resistant for this purpose and still O(plan) to compute.
-# In-place regeneration of the underlying files WITHIN one application is
-# outside the contract, same as Spark's own table/statistics caches. A
-# size cap bounds pathological many-plan sessions.
-_INJECTIVE_CACHE: dict[tuple[str, str], bool] = {}
-_INJECTIVE_CACHE_MAX = 64
-
-
-# the collision-resistant plan digest the memo keys on (shared with the
-# IVF cell-cap attestation — see data.plan_identity for the exprId
-# canonicalization rationale)
-_plan_identity = plan_identity
-
-
 def _cont_hash_injective(base: DataFrame) -> bool:
     """Corpus-level injectivity attestation for the 60-bit shingle hash:
     group the exploded (hash → string) shingle volume by hash and look
@@ -1871,13 +1810,12 @@ def _cont_hash_injective(base: DataFrame) -> bool:
     Non-empty ⇒ callers keep the full string-set verify, so exactness
     holds unconditionally on every branch (filter-then-confirm at corpus
     granularity — VERDICT r12 #3's win-back of the r12 verify-port cost).
-    One linear aggregation over the shingle volume, memoized per
-    (session, corpus plan); the limit(1).collect() is bounded planning
-    state (0 or 1 rows)."""
-    app_id = base.sparkSession.sparkContext.applicationId
-    key = (app_id, _plan_identity(base))
-    hit = _INJECTIVE_CACHE.get(key)
-    if hit is None:
+    One linear aggregation over the shingle volume (~6 s at sf0.1),
+    memoized per corpus plan, the way an engine caches ANALYZE statistics
+    per table version; the limit(1).collect() is bounded planning state
+    (0 or 1 rows)."""
+
+    def build():
         dup = (
             base.select(F.explode("shs").alias("g"))
             .select(T.token_hash(F.col("g")).alias("h"), "g")
@@ -1885,11 +1823,9 @@ def _cont_hash_injective(base: DataFrame) -> bool:
             .agg(F.count_distinct("g").alias("n_strings"))
             .filter(F.col("n_strings") > 1)
         )
-        hit = not dup.limit(1).collect()
-        if len(_INJECTIVE_CACHE) >= _INJECTIVE_CACHE_MAX:
-            _INJECTIVE_CACHE.clear()
-        _INJECTIVE_CACHE[key] = hit
-    return hit
+        return not dup.limit(1).collect()
+
+    return session_memo(base.sparkSession, "injectivity", plan_identity(base), build)
 
 
 def _cont_score_exact(sized: DataFrame, order_keys: list[str]) -> DataFrame:

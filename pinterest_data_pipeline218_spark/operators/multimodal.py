@@ -1108,32 +1108,15 @@ def phash_neardup_pairs(
 # non-degenerate document plus deterministic natural collisions.
 PHASH_TWIN_OFFSET = 1_000_000
 
-# Offset attestations keyed by (application id, canonicalized plan
-# digest) — one bounded 1-row planning aggregate (parquet-footer max)
-# per distinct corpus plan per application, the _assert_cell_cap memo
-# discipline (operators/similarity.py).
-_TWIN_OFFSET_CACHE: dict[tuple[str, str], int] = {}
-_TWIN_OFFSET_CACHE_MAX = 64
-
-
 def _assert_twin_offset(docs: DataFrame) -> None:
     """Planning-time attestation that every natural doc_id sits below
     PHASH_TWIN_OFFSET, so planted-twin ids can never alias onto real
     documents (ambiguous pairs both engines would agree on — the oracle
     gate cannot catch it, only this raise can). Raise-not-proceed, the
-    IVF cell-cap precedent."""
-    from ..data import plan_identity
-
-    app_id = docs.sparkSession.sparkContext.applicationId
-    key = (app_id, plan_identity(docs))
-    mx = _TWIN_OFFSET_CACHE.get(key)
-    if mx is None:
-        row = docs.agg(F.max("doc_id").alias("mx")).collect()[0]
-        mx = -1 if row.mx is None else int(row.mx)
-        if len(_TWIN_OFFSET_CACHE) >= _TWIN_OFFSET_CACHE_MAX:
-            _TWIN_OFFSET_CACHE.clear()
-        _TWIN_OFFSET_CACHE[key] = mx
-    if mx >= PHASH_TWIN_OFFSET:
+    IVF cell-cap precedent. One bounded 1-row aggregate (a parquet-footer
+    max); no registry query reaches it, so it is not memoized."""
+    mx = docs.agg(F.max("doc_id").alias("mx")).collect()[0].mx
+    if mx is not None and mx >= PHASH_TWIN_OFFSET:
         raise ValueError(
             f"max(doc_id)={mx} >= PHASH_TWIN_OFFSET={PHASH_TWIN_OFFSET}: "
             "planted twin ids would alias onto natural documents — raise "

@@ -27,7 +27,7 @@ import tempfile
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..data import load_table
+from ..data import file_stamp, literal_df, load_table, plan_identity, session_memo
 from ..functions.vectors import as_double_array, cosine, cosine_sql_duckdb, dot
 
 TOP_K = 10
@@ -852,26 +852,22 @@ def write_ivf_index(emb: DataFrame, path: str) -> None:
     data = emb.withColumn("cell", F.col("label"))
     data.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/data")
     build_ivf_centroids(emb).write.mode("overwrite").parquet(f"{path}/centroids")
-    # an in-place rebuild at the same path must invalidate the RAM-resident
-    # quantizer, or a re-probe in this process ranks against stale centroids
-    _CENTROID_CACHE.pop(path, None)
-
-
-_CENTROID_CACHE: dict[str, list[tuple[int, list[float]]]] = {}
 
 
 def _load_centroids(spark: SparkSession, index_path: str) -> list[tuple[int, list[float]]]:
     """The coarse quantizer, resident driver-side — exactly how IVF systems
     hold it (|cells| x dim floats, kilobytes at any corpus size). Collected
-    once per index path and cached, so a steady-state probe runs ONE Spark
-    job (the pruned cell scan) instead of paying a centroid-ranking job per
-    query. Cache keys are index paths; the gated query's paths already embed
-    the source file's mtime+size (_ivf_cache_dir), so data regeneration
-    rotates the key instead of serving stale centroids."""
-    if index_path not in _CENTROID_CACHE:
-        rows = spark.read.parquet(f"{index_path}/centroids").collect()
-        _CENTROID_CACHE[index_path] = [(r.label, list(r.c)) for r in rows]
-    return _CENTROID_CACHE[index_path]
+    once per index build, so a steady-state probe runs ONE Spark job (the
+    pruned cell scan) instead of paying a centroid-ranking job per query.
+    The key carries the centroid directory's on-disk stamp: an in-place
+    rebuild at the same path misses instead of ranking against stale
+    centroids, while an upsert (which leaves the centroids alone) hits."""
+    cents = f"{index_path}/centroids"
+
+    def build():
+        return [(r.label, list(r.c)) for r in spark.read.parquet(cents).collect()]
+
+    return session_memo(spark, "ivf_centroids", (index_path, file_stamp(cents)), build)
 
 
 def _rank_cells(
@@ -1378,7 +1374,6 @@ def write_pq_index(emb: DataFrame, path: str, pq_k: int = PQ_K) -> None:
         f"{path}/codebook"
     )
     build_ivf_centroids(emb).write.mode("overwrite").parquet(f"{path}/centroids")
-    _CENTROID_CACHE.pop(path, None)  # see write_ivf_index
 
 
 def pq_index_topk(
@@ -1615,27 +1610,15 @@ def _pq_res_codes_cb(
     return _pq_res_encode(rcomps, cb), cb, cm
 
 
-# Session-scoped memo of the TRAINED residual codebook values (r16,
-# VERDICT r15 #1). The unrolled in-plan Lloyd formulation carried 114
-# static scans / 220 exchanges (plans/r16/sim_ivfpq_lloyd_topk_before.txt)
-# and its nested broadcast builds serialized the whole query (5.3 s driver,
+# Trained residual codebook values, memoized per emb plan (r16, VERDICT
+# r15 #1). The unrolled in-plan Lloyd formulation carried 114 static
+# scans / 220 exchanges (plans/r16/sim_ivfpq_lloyd_topk_before.txt) and
+# its nested broadcast builds serialized the whole query (5.3 s driver,
 # 8-vs-32-core scaling ratio 1.02): every round's codebook subtree embeds
-# every earlier round's encode. The codebook is PQ_M·PQ_SUBDIM·pq_k rows of
-# small integers — kilobytes of index-build planning state, the same
-# category as the BPE merge table (text_analysis._BPE_MERGES_MEMO) and the
-# on-disk IVF centroids: memoized per (applicationId, emb plan identity,
-# rounds, pq_k), first build per session computes from the parquet inputs
-# via per-round jobs over ONE localCheckpointed residual stream (the
-# graph-loop idiom, guide §5/§2.4).
-#
-# Data-immutability assumption (ADVICE r15, documented): plan_identity
-# digests the emb PLAN (paths, expressions), not file contents — the memo
-# assumes the sf_dir's parquet is immutable for the application's lifetime,
-# the standing convention of every attestation memo in this repo (the
-# driver starts a fresh JVM per bench/oracle run, so nothing survives a
-# data regeneration).
-_RES_CB_MEMO: dict[tuple, list] = {}
-_RES_CB_MEMO_MAX = 16
+# every earlier round's encode. The codebook is PQ_M·PQ_SUBDIM·pq_k rows
+# of small integers; the first build per session computes it from the
+# parquet inputs via per-round jobs over ONE localCheckpointed residual
+# stream (the graph-loop idiom, guide §5/§2.4).
 _RES_CB_SCHEMA = "m int, r int, j int, qc bigint"
 
 
@@ -1654,16 +1637,9 @@ def _trained_res_cb(
     from pyspark.sql import Window
 
     spark = emb.sparkSession
-    from ..data import plan_identity
+    key = (plan_identity(emb), lloyd_rounds, pq_k)
 
-    key = (
-        spark.sparkContext.applicationId,
-        plan_identity(emb),
-        lloyd_rounds,
-        pq_k,
-    )
-    got = _RES_CB_MEMO.get(key)
-    if got is None:
+    def build():
         # ONE materialization feeds the seed collect and every round's
         # encode+update — without it each training job would re-run the
         # scan + posexplode + cell-means join + vec_id shuffle.
@@ -1694,13 +1670,11 @@ def _trained_res_cb(
                 .collect()
             )
             got = [(r["m"], r["r"], r["j"], r["qc"]) for r in rows]
-        if len(_RES_CB_MEMO) >= _RES_CB_MEMO_MAX:
-            _RES_CB_MEMO.pop(next(iter(_RES_CB_MEMO)))
-        _RES_CB_MEMO[key] = got
+        return got
+
+    got = session_memo(spark, "residual_codebook", key, build)
     # per-session STABLE relation object (see data.literal_df): keeps every
     # consumer's plan digest identical across executions
-    from ..data import literal_df
-
     return literal_df(spark, key, got, _RES_CB_SCHEMA)
 
 
@@ -2117,32 +2091,21 @@ IVF_INCR_MOD = 5  # vec_id % 5 == 0 plays the "arriving" 20% in the gate
 # both engines would agree on (so the oracle gate could not catch it).
 IVF_CELL_CAP = 1024
 
-# Verdicts keyed by (application id, canonicalized plan digest) — one
-# bounded planning count per distinct quantizer plan per application,
-# the injectivity-attestation memo discipline (operators/dedup.py).
-_CELL_CAP_CACHE: dict[tuple[str, str], int] = {}
-_CELL_CAP_CACHE_MAX = 64
-
-
 def _assert_cell_cap(cents: DataFrame) -> None:
     """Planning-time attestation that the quantizer fits IVF_CELL_CAP.
     The count is bounded by limit(cap+1) — never data-sized — and
-    memoized per (session, quantizer plan) so repeated executions of the
-    same assignment query pay it once."""
-    from ..data import plan_identity
-
-    app_id = cents.sparkSession.sparkContext.applicationId
-    key = (app_id, plan_identity(cents))
-    n = _CELL_CAP_CACHE.get(key)
-    if n is None:
-        # distinct before the limit (ADVICE r14): the cap bounds CELLS,
-        # not rows — a quantizer emitting duplicate label rows (e.g. an
-        # upstream join fan-out) must not trip the assertion while its
-        # distinct cells still fit
-        n = cents.select("label").distinct().limit(IVF_CELL_CAP + 1).count()
-        if len(_CELL_CAP_CACHE) >= _CELL_CAP_CACHE_MAX:
-            _CELL_CAP_CACHE.clear()
-        _CELL_CAP_CACHE[key] = n
+    memoized per quantizer plan so repeated executions of the same
+    assignment query pay it once."""
+    # distinct before the limit (ADVICE r14): the cap bounds CELLS, not
+    # rows — a quantizer emitting duplicate label rows (e.g. an upstream
+    # join fan-out) must not trip the assertion while its distinct cells
+    # still fit
+    n = session_memo(
+        cents.sparkSession,
+        "cell_cap",
+        plan_identity(cents),
+        lambda: cents.select("label").distinct().limit(IVF_CELL_CAP + 1).count(),
+    )
     if n > IVF_CELL_CAP:
         raise ValueError(
             f"IVF quantizer exceeds IVF_CELL_CAP={IVF_CELL_CAP} cells: "

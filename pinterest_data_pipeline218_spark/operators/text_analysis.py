@@ -11,7 +11,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..data import load_table, shielded_sort
+from ..data import load_table, plan_identity, session_memo, shielded_sort
 from ..functions import text as T
 
 
@@ -821,23 +821,6 @@ def _bpe_pairs(seg_df: DataFrame) -> DataFrame:
     )
 
 
-# Trained merge tables keyed by (application id, canonicalized vocab plan,
-# n_merges) — the attestation-memo discipline (operators/dedup.py): the
-# merges are kilobytes of PLANNING state embedded in the returned plan as
-# literals, and two gated queries (text_bpe_tokens, corpus_tokenizer_
-# fertility) train the identical table per execution — K+1 driver jobs
-# each, re-paid every bench rep. First build per session still computes
-# from the parquet inputs.
-# Data-immutability assumption (ADVICE r15, documented): plan_identity
-# digests the vocab PLAN (paths, expressions), not file contents — like
-# every attestation memo here, this assumes sf_dir's parquet is immutable
-# for the application's lifetime (the driver starts a fresh JVM per run;
-# regenerating a fixture in place mid-application would serve stale
-# merges).
-_BPE_MERGES_MEMO: dict[tuple, list[str]] = {}
-_BPE_MERGES_MEMO_MAX = 16
-
-
 def train_bpe_merges(vocab: DataFrame, n_merges: int = BPE_MERGES) -> list[str]:
     """Greedy BPE training over a (w, cnt) vocabulary table: each round
     counts adjacent-pair frequencies over the CURRENT segmentation, picks
@@ -850,45 +833,39 @@ def train_bpe_merges(vocab: DataFrame, n_merges: int = BPE_MERGES) -> list[str]:
     round is one explode + map-side-combined groupBy over the cached
     vocab, and the chosen pair (a one-row collect) is kilobyte
     query-planning state like the IVF centroids. Application to the full
-    corpus happens scan-side later with the merges as literals."""
-    from ..data import plan_identity
+    corpus happens scan-side later with the merges as literals. The merge
+    table is memoized per (vocab plan, n_merges): K+1 driver jobs that
+    would otherwise be re-paid by every execution."""
 
-    memo_key = (
-        vocab.sparkSession.sparkContext.applicationId,
-        plan_identity(vocab),
-        n_merges,
-    )
-    got = _BPE_MERGES_MEMO.get(memo_key)
-    if got is not None:
-        return list(got)
-    cur = vocab.select("w", "cnt", _bpe_seg_init("w").alias("seg")).persist()
-    try:
-        merges: list[str] = []
-        for _ in range(n_merges):
-            top = (
-                _bpe_pairs(cur)
-                .groupBy("pair")
-                .agg(F.sum("cnt").alias("c"))
-                .orderBy(F.desc("c"), F.asc("pair"))
-                .limit(1)
-                .collect()
-            )
-            if not top:
-                break
-            pair = top[0]["pair"]
-            merges.append(pair)
-            cur = cur.withColumn(
-                "seg",
-                F.replace(
-                    F.col("seg"), F.lit(pair), F.lit(pair.replace(BPE_SEP, ""))
-                ),
-            )
-        if len(_BPE_MERGES_MEMO) >= _BPE_MERGES_MEMO_MAX:
-            _BPE_MERGES_MEMO.pop(next(iter(_BPE_MERGES_MEMO)))
-        _BPE_MERGES_MEMO[memo_key] = list(merges)
-        return merges
-    finally:
-        cur.unpersist()
+    def build():
+        cur = vocab.select("w", "cnt", _bpe_seg_init("w").alias("seg")).persist()
+        try:
+            merges: list[str] = []
+            for _ in range(n_merges):
+                top = (
+                    _bpe_pairs(cur)
+                    .groupBy("pair")
+                    .agg(F.sum("cnt").alias("c"))
+                    .orderBy(F.desc("c"), F.asc("pair"))
+                    .limit(1)
+                    .collect()
+                )
+                if not top:
+                    break
+                pair = top[0]["pair"]
+                merges.append(pair)
+                cur = cur.withColumn(
+                    "seg",
+                    F.replace(
+                        F.col("seg"), F.lit(pair), F.lit(pair.replace(BPE_SEP, ""))
+                    ),
+                )
+            return merges
+        finally:
+            cur.unpersist()
+
+    key = (plan_identity(vocab), n_merges)
+    return list(session_memo(vocab.sparkSession, "bpe_merges", key, build))
 
 
 def apply_bpe_merges(seg: F.Column, merges: list[str]) -> F.Column:

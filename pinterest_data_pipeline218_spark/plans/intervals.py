@@ -21,7 +21,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..data import load_table
+from ..data import load_table, plan_identity, session_memo
 from .events import SESSION_GAP_SECONDS
 
 OVERLAP_BUCKET = "1 hour"  # shared grain for the bucketized overlap join
@@ -52,15 +52,6 @@ def user_sessions(ev: DataFrame) -> DataFrame:
         F.max("ts").alias("sess_end"),
         F.count(F.lit(1)).alias("n_events"),
     )
-
-
-# Data-immutability assumption (ADVICE r15, documented): keyed on
-# (applicationId, minute-agg plan identity) — plan_identity sees paths,
-# not file contents, so like every attestation memo in this repo it
-# assumes the source parquet is immutable for the application's lifetime
-# (the driver starts a fresh JVM per run).
-_OUTAGE_PLANNING_MEMO: dict[tuple, tuple] = {}
-_OUTAGE_PLANNING_MEMO_MAX = 16
 
 
 def outage_windows(ev: DataFrame) -> DataFrame:
@@ -150,21 +141,10 @@ def outage_windows(ev: DataFrame) -> DataFrame:
             )
         )
 
-    # Planning state memo (r15, the attestation-memo discipline): the two
-    # scalars + the <=2-per-day boundary set are plan-determined kilobytes,
-    # but were re-collected (2 jobs + a transient persist) on EVERY
-    # execution. Keyed (applicationId, canonicalized minute-agg plan),
-    # bounded; the first build per session still computes from parquet.
-    from ..data import plan_identity
-
-    memo_key = (
-        ev.sparkSession.sparkContext.applicationId,
-        plan_identity(_minute_agg()),
-    )
-    got = _OUTAGE_PLANNING_MEMO.get(memo_key)
-    if got is not None:
-        n_minutes, total, bnd = got
-    else:
+    # Planning state (r15): the two scalars + the <=2-per-day boundary set
+    # are plan-determined kilobytes, but were re-collected (2 jobs + a
+    # transient persist) on EVERY execution; memoized per minute-agg plan.
+    def build():
         cached = _minute_agg().persist()
         try:
             n_minutes, total = cached.agg(
@@ -180,9 +160,11 @@ def outage_windows(ev: DataFrame) -> DataFrame:
             # state; cache read — no second events scan at planning time
         finally:
             cached.unpersist(blocking=True)
-        if len(_OUTAGE_PLANNING_MEMO) >= _OUTAGE_PLANNING_MEMO_MAX:
-            _OUTAGE_PLANNING_MEMO.pop(next(iter(_OUTAGE_PLANNING_MEMO)))
-        _OUTAGE_PLANNING_MEMO[memo_key] = (n_minutes, total, list(bnd))
+        return n_minutes, total, bnd
+
+    n_minutes, total, bnd = session_memo(
+        ev.sparkSession, "outage_planning", plan_identity(_minute_agg()), build
+    )
     interior = _islands(_minute_agg(), n_minutes, total).filter(
         ~F.col("at_head") & ~F.col("at_tail")
     ).select("i_start", "i_end")

@@ -1739,20 +1739,30 @@ def test_containment_hash_and_string_branches_agree(spark, monkeypatch):
     (the attestation IS the proof they coincide — this pins the fallback
     wiring, which no real corpus exercises). Also pins that the
     attestation actually memoizes per (session, plan)."""
-    from pinterest_data_pipeline218_spark.data import load_table
+    from pinterest_data_pipeline218_spark.data import (
+        load_table,
+        memo_stats,
+        plan_identity,
+    )
     from pinterest_data_pipeline218_spark.operators import dedup as D
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    # a fresh session's memo is empty, so the first attestation computes
+    fresh = spark.newSession()
+    docs = load_table(fresh, SF, "documents")
     base = D._cont_shingle_strings(docs, "doc_id")
-    D._INJECTIVE_CACHE.clear()
-    assert D._cont_hash_injective(base)  # computes and caches
-    key = (spark.sparkContext.applicationId, D._plan_identity(base))
-    assert D._INJECTIVE_CACHE[key] is True  # memoized under the plan key
+    assert D._cont_hash_injective(base)  # computes and memoizes
+    stats = memo_stats(fresh)["injectivity"]
+    assert (stats["hits"], stats["misses"]) == (0, 1)
+    # memoized under the plan key: a REBUILT corpus plan is served the
+    # stored True verdict without recomputing
+    assert D._cont_hash_injective(D._cont_shingle_strings(docs, "doc_id")) is True
+    stats = memo_stats(fresh)["injectivity"]
+    assert (stats["hits"], stats["misses"]) == (1, 1)
     # the identity is collision-resistant (md5 of the analyzed plan, not
     # the 32-bit semanticHash — ADVICE r13 medium) and plan-sensitive:
     other = D._cont_shingle_strings(docs.limit(3), "doc_id")
-    assert D._plan_identity(other) != D._plan_identity(base)
-    assert D._plan_identity(base) == D._plan_identity(
+    assert plan_identity(other) != plan_identity(base)
+    assert plan_identity(base) == plan_identity(
         D._cont_shingle_strings(docs, "doc_id")
     )
     # r15 regression: an in-memory relation's STRING rendering shows only
@@ -1765,7 +1775,7 @@ def test_containment_hash_and_string_branches_agree(spark, monkeypatch):
     # is asserted on the parquet-rooted `base` above.)
     lr_a = spark.createDataFrame([(0, 1), (1, 2)], "a long, b long")
     lr_b = spark.createDataFrame([(5, 6), (6, 7)], "a long, b long")
-    assert D._plan_identity(lr_a) != D._plan_identity(lr_b)
+    assert plan_identity(lr_a) != plan_identity(lr_b)
 
     def rows_of(df):
         return {
@@ -2576,10 +2586,9 @@ def test_ivf_index_upsert_is_fresh_and_preserves_base(spark, tmp_path):
     identical score (no existing partition was touched); (c) the quantizer
     was not invalidated (same centroid list object — append must not
     rotate the cache key)."""
-    from pinterest_data_pipeline218_spark.data import load_table
+    from pinterest_data_pipeline218_spark.data import load_table, memo_stats
     from pinterest_data_pipeline218_spark.functions.vectors import as_double_array
     from pinterest_data_pipeline218_spark.operators.similarity import (
-        _CENTROID_CACHE,
         NPROBE,
         ivf_index_topk,
         ivf_index_upsert,
@@ -2603,12 +2612,16 @@ def test_ivf_index_upsert_is_fresh_and_preserves_base(spark, tmp_path):
     new = spark.createDataFrame(
         [(9999, 99, qvec)], "vec_id long, label int, v array<double>"
     )
+    cached = memo_stats(spark)["ivf_centroids"]
     ivf_index_upsert(spark, path, new)
-    assert path in _CENTROID_CACHE  # frozen quantizer: cache NOT rotated
-
     after = ivf_index_topk(
         spark, path, query_vec=qvec, exclude_vec_id=0, nprobe=NPROBE
     ).collect()
+    # frozen quantizer: the upsert and the probe after it both hit the
+    # centroids memoized before it, so the cache key was NOT rotated
+    stats = memo_stats(spark)["ivf_centroids"]
+    assert stats["misses"] == cached["misses"]
+    assert stats["hits"] == cached["hits"] + 2
     assert after[0].vec_id == 9999 and after[0].cos_sim == 1.0  # freshness
     after_map = {r.vec_id: r.cos_sim for r in after}
     for vid, cs in before.items():
@@ -3973,6 +3986,7 @@ def test_ngram_jaccard_ppjoin_matches_exhaustive_model(spark, tmp_path, monkeypa
     import random
 
     from pinterest_data_pipeline218_spark.operators import dedup as D
+    from pinterest_data_pipeline218_spark.data import memo_stats
     from pinterest_data_pipeline218_spark.operators.dedup import (
         NGRAM_T_DEN,
         NGRAM_T_NUM,
@@ -4014,14 +4028,24 @@ def test_ngram_jaccard_ppjoin_matches_exhaustive_model(spark, tmp_path, monkeypa
                 j = round(len(sa & sb) / len(sa | sb), 6)
                 expected[(min(ida, idb), max(ida, idb))] = j
     assert expected, "fixture must plant pairs above the threshold"
-    D._INJECTIVE_CACHE.clear()
+    # a fresh session's memo is empty, so the attestation computes here
+    fresh = spark.newSession()
+    verdicts = []
+    attest = D._cont_hash_injective
+
+    def recording(base):
+        verdicts.append(attest(base))
+        return verdicts[-1]
+
+    monkeypatch.setattr(D, "_cont_hash_injective", recording)
     got = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in dedup_ngram_jaccard(spark, str(tmp_path)).collect()
+        for r in dedup_ngram_jaccard(fresh, str(tmp_path)).collect()
     }
     # the planted corpus is collision-free, so the default run above
     # took the attested hash path; now force the string fallback
-    assert any(D._INJECTIVE_CACHE.values()), "hash path was not attested"
+    assert verdicts == [True], "hash path was not attested"
+    assert memo_stats(fresh)["injectivity"]["misses"] == 1
     monkeypatch.setattr(D, "_cont_hash_injective", lambda _base: False)
     got_str = {
         (r.doc_a, r.doc_b): r.jaccard

@@ -4246,10 +4246,15 @@ def test_ivf_assign_raises_over_cell_cap_and_memoizes(spark):
     (session, quantizer plan) like the injectivity attestation."""
     import pytest as _pytest
 
+    from pinterest_data_pipeline218_spark.data import (
+        memo_stats,
+        plan_identity,
+        session_memo,
+    )
     from pinterest_data_pipeline218_spark.operators import similarity as S
 
-    def mk_cents(n_cells):
-        return spark.createDataFrame(
+    def mk_cents(session, n_cells):
+        return session.createDataFrame(
             [
                 (i, [float(i + 1) if d == i % 4 else 0.0 for d in range(4)])
                 for i in range(n_cells)
@@ -4257,16 +4262,23 @@ def test_ivf_assign_raises_over_cell_cap_and_memoizes(spark):
             "label int, c array<double>",
         )
 
-    new = spark.createDataFrame(
-        [(1, [0.0, 0.0, 0.0, 1.0])], "vec_id long, v array<double>"
-    )
+    def mk_new(session):
+        return session.createDataFrame(
+            [(1, [0.0, 0.0, 0.0, 1.0])], "vec_id long, v array<double>"
+        )
 
-    S._CELL_CAP_CACHE.clear()
+    def unbuilt():
+        raise AssertionError("verdict was not memoized")
+
+    # each case runs in a fresh session, whose memo starts empty
+    over_session = spark.newSession()
+    over = mk_cents(over_session, S.IVF_CELL_CAP + 8)
     with _pytest.raises(ValueError, match="IVF_CELL_CAP"):
-        S.ivf_assign_cells(new, mk_cents(S.IVF_CELL_CAP + 8))
+        S.ivf_assign_cells(mk_new(over_session), over)
     # the over-cap verdict is memoized as cap+1 (the bounded count never
     # scans past the limit)
-    assert max(S._CELL_CAP_CACHE.values()) == S.IVF_CELL_CAP + 1
+    verdict = session_memo(over_session, "cell_cap", plan_identity(over), unbuilt)
+    assert verdict == S.IVF_CELL_CAP + 1
 
     # at the cap exactly: assignment proceeds, ties break to the lowest
     # cell id of the query's axis (axis 3 -> label 3), and re-asserting
@@ -4277,10 +4289,12 @@ def test_ivf_assign_raises_over_cell_cap_and_memoizes(spark):
     # the memo-hit-across-rebuilds contract holds for file-rooted
     # quantizers, which every gated query has — pinned by
     # test_containment_hash_and_string_branches_agree's parquet case.)
-    S._CELL_CAP_CACHE.clear()
-    cents = mk_cents(S.IVF_CELL_CAP)
+    at_session = spark.newSession()
+    cents, new = mk_cents(at_session, S.IVF_CELL_CAP), mk_new(at_session)
     got = S.ivf_assign_cells(new, cents).collect()
     assert len(got) == 1 and got[0].cell == 3
-    assert len(S._CELL_CAP_CACHE) == 1
+    stats = memo_stats(at_session)["cell_cap"]
+    assert (stats["hits"], stats["misses"]) == (0, 1)
     S.ivf_assign_cells(new, cents)
-    assert len(S._CELL_CAP_CACHE) == 1  # same plan object -> memo hit
+    stats = memo_stats(at_session)["cell_cap"]
+    assert (stats["hits"], stats["misses"]) == (1, 1)  # same plan object -> memo hit

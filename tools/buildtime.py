@@ -6,10 +6,12 @@ every bench rep (bench.py calls the builder per rep), so builder time is
 real bench time. This sweep names the rows worth the F.expr / builder-memo
 treatment (guide §5 "the driver should do almost no data work"). Next to
 each build time it prints how many SQL executions the builder fired, read
-from Spark's SQL status store, and how many generated classes those
-executions compiled (Spark's CodegenMetrics): on the first (cold) build,
+from Spark's SQL status store, how many generated classes those
+executions compiled (Spark's CodegenMetrics), and how many planning-state
+memo lookups hit and missed (data.memo_stats): on the first (cold) build,
 which fills the memos, and on the timed (warm) builds. A warm build that
-compiles classes is timing Janino, not the builder.
+compiles classes is timing Janino, not the builder; a warm build should
+show 0 memo misses.
 
 Usage:
     python tools/buildtime.py                # all registry queries, 2 reps
@@ -26,6 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
+from pinterest_data_pipeline218_spark.data import memo_stats  # noqa: E402
 from pinterest_data_pipeline218_spark.session import (  # noqa: E402
     codegen_compiles,
     get_spark,
@@ -47,15 +50,17 @@ def main() -> None:
     out = []
     for n in names:
         # warm-up build (imports, first-touch caches, memo fills)
-        _, cold, cold_cg = _timed(qs[n], spark, sf_dir)
+        _, cold, cold_cg, cold_memo = _timed(qs[n], spark, sf_dir)
         runs = [_timed(qs[n], spark, sf_dir) for _ in range(reps)]
-        best, warm, warm_cg = min(runs)
-        out.append((best, warm, cold, warm_cg, cold_cg, n))
+        best, warm, warm_cg, warm_memo = min(runs)
+        out.append((best, warm, cold, warm_cg, cold_cg, warm_memo, cold_memo, n))
     out.sort(reverse=True)
-    for t, warm, cold, warm_cg, cold_cg, n in out:
+    for t, warm, cold, warm_cg, cold_cg, warm_memo, cold_memo, n in out:
         print(
             f"BUILD {t:7.3f}s sql {warm:2d} (cold {cold:2d}) "
-            f"compiles {warm_cg:3d} (cold {cold_cg:3d}) {n}"
+            f"compiles {warm_cg:3d} (cold {cold_cg:3d}) "
+            f"memo hit/miss {warm_memo[0]}/{warm_memo[1]} "
+            f"(cold {cold_memo[0]}/{cold_memo[1]}) {n}"
         )
 
 
@@ -74,13 +79,28 @@ def last_sql_execution(spark) -> int:
     return -1
 
 
-def _timed(fn, spark, sf_dir) -> tuple[float, int, int]:
-    """(seconds, SQL executions, compiled classes) of one builder call."""
+def memo_lookups(spark) -> tuple[int, int]:
+    """(hits, misses) of the session's planning-state memo, summed over
+    its namespaces."""
+    stats = memo_stats(spark).values()
+    return sum(s["hits"] for s in stats), sum(s["misses"] for s in stats)
+
+
+def _timed(fn, spark, sf_dir) -> tuple[float, int, int, tuple[int, int]]:
+    """(seconds, SQL executions, compiled classes, (memo hits, memo
+    misses)) of one builder call."""
     e0, c0 = last_sql_execution(spark), codegen_compiles(spark)
+    h0, m0 = memo_lookups(spark)
     t0 = time.monotonic()
     fn(spark, sf_dir)
     dt = time.monotonic() - t0
-    return dt, last_sql_execution(spark) - e0, codegen_compiles(spark) - c0
+    h1, m1 = memo_lookups(spark)
+    return (
+        dt,
+        last_sql_execution(spark) - e0,
+        codegen_compiles(spark) - c0,
+        (h1 - h0, m1 - m0),
+    )
 
 
 if __name__ == "__main__":

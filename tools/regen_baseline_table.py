@@ -24,7 +24,7 @@ NEW_NOTES = {
     # the seven r14-staged operators, gated r15
     "sim_mmr_topk": "r15 NEW: TakeOrdered pool + bounded pairwise sims; driver greedy replay",
     "text_readability_score": "r15 NEW: Flesch over integer proxy; shielded presentation sort",
-    "corpus_tokenizer_fertility": "r15 NEW: per-lang BPE fertility over the shared merge table",
+    "corpus_tokenizer_fertility": "r15 NEW: per-lang BPE fertility over a trained merge table",
     "dedup_cluster_report": "r15 NEW: two map-side-combinable rollups over capped-CC labels",
     "mm_scene_cuts": "r15 NEW: 1->N frame kernel + doc-partitioned lag/cut windows",
     "dq_freshness_lag": "r15 NEW: staleness vs the dataset frontier; one type-partitioned pass",
