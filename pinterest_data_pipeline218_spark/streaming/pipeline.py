@@ -348,7 +348,107 @@ def sliding_counts(
     )
 
 
+# ------------------------------------------------------- incremental state
+class IncrementalState:
+    """The one on-disk format every incremental twin below shares. A state
+    is a set of named partials, each a mergeable summary (additive cells,
+    set unions, min-k / re-rank candidates, carry chains; the KMV,
+    count-min, HLL and histogram states are the mergeable summaries of
+    *Approximation Algorithms for Large Scale Data Analysis*, PODS 2021),
+    declared with its DDL schema; the twin supplies the per-batch partial
+    computation and the read-time merge + batch finisher.
+
+    REPLAY IDEMPOTENCE: foreachBatch is at-least-once, so each batch's
+    partials land in their own ``{state_dir}/{sub}/batch_id=<bid>``
+    partition written with ``mode("overwrite")``. A batch replayed after a
+    crash rewrites its partition instead of appending a duplicate, and no
+    state lives in executor memory, so the state survives restarts with
+    the stream's checkpoint.
+
+    Assembly reads every partial across all batches (partition
+    discovery's ``batch_id`` column dropped) or, for a ``carry`` partial
+    (a chain whose generation b is a function of generation b-1 and batch
+    b), its latest generation only. A partial with nothing landed reads as
+    a zero-row frame of its declared schema, so before the first batch an
+    assembly is the merge over zero-row partials: ``.limit(0)`` of it, or,
+    for a ``report`` state (a fixed-shape zero report, or a report whose
+    other side is a static baseline), that result itself."""
+
+    def __init__(self, *, report: bool = False, carry: tuple = (), **partials: str):
+        """``partials``: name -> DDL schema; ``carry``: the partial names
+        read at their latest generation only."""
+        self.report, self.carry, self.partials = report, carry, partials
+
+    @staticmethod
+    def _path(state_dir: str, sub: str, batch_id: int | None = None) -> str:
+        return f"{state_dir}/{sub}" + ("" if batch_id is None else f"/batch_id={batch_id}")
+
+    def write(self, state_dir: str, batch_id: int, **frames: DataFrame) -> None:
+        """Land one micro-batch's partials, one overwritten partition each."""
+        for sub, df in frames.items():
+            df.write.mode("overwrite").parquet(self._path(state_dir, sub, batch_id))
+
+    def read(
+        self, spark: SparkSession, state_dir: str, sub: str, batch_id: int | None = None
+    ) -> DataFrame:
+        """One partial: every batch's rows, or one batch's; the zero-row
+        frame of its declared schema where nothing has landed."""
+        path = self._path(state_dir, sub, batch_id)
+        if not os.path.isdir(path):
+            return spark.createDataFrame([], self.partials[sub])
+        return spark.read.parquet(path).drop("batch_id")
+
+    def _latest(self, state_dir: str, sub: str) -> int | None:
+        root = self._path(state_dir, sub)
+        names = os.listdir(root) if os.path.isdir(root) else []
+        bids = [int(d.split("=", 1)[1]) for d in names if d.startswith("batch_id=")]
+        return max(bids, default=None)
+
+    def assemble(self, spark: SparkSession, state_dir: str, merge) -> DataFrame:
+        """``merge({sub: partial})`` over the accumulated state."""
+        landed = any(os.path.isdir(self._path(state_dir, s)) for s in self.partials)
+        out = merge({
+            sub: self.read(spark, state_dir, sub,
+                           self._latest(state_dir, sub) if sub in self.carry else None)
+            for sub in self.partials
+        })
+        return out if landed or self.report else out.limit(0)
+
+    @staticmethod
+    def attach(
+        stream: DataFrame, checkpoint: str, write, *args, **kwargs
+    ) -> StreamingQuery:
+        """Run ``write(batch_df, *args, batch_id=<bid>, **kwargs)`` on every
+        micro-batch of ``stream`` (foreachBatch, checkpointed at
+        ``checkpoint``). Batch ids are sequential per query, which is the
+        carry chains' prev = bid - 1 contract."""
+        return (
+            stream.writeStream.foreachBatch(
+                lambda df, bid: write(df, *args, batch_id=bid, **kwargs)
+            )
+            .option("checkpointLocation", checkpoint)
+            .start()
+        )
+
+
+def _sum_counters(counters: DataFrame) -> DataFrame:
+    """One row: every counter column summed across batches, 0 where no
+    batch counted anything (``F.sum`` over a quiet trigger's zero rows is
+    NULL)."""
+    return counters.agg(
+        *(F.coalesce(F.sum(c), F.lit(0)).cast("long").alias(c) for c in counters.columns)
+    )
+
+
 # --------------------------------------------------------- incremental report
+QUALITY_STATE = IncrementalState(
+    report=True,
+    counters="n_docs bigint, n_tokens bigint, n_quality_pass bigint, "
+    "n_repetition_pass bigint, n_contaminated bigint",
+    keys="kind string, value string",
+)
+
+
 def quality_state_batch(
     batch_df: DataFrame, bench: DataFrame, state_dir: str, batch_id: int = -1
 ) -> None:
@@ -356,26 +456,13 @@ def quality_state_batch(
     dashboard. Everything the report needs decomposes into either
     (a) summable integer counters — docs, tokens, quality passes,
     repetition passes (the bigram gate is within-doc), contamination hits
-    vs the STATIC eval set — one row under
-    ``{state_dir}/counters/batch_id=<bid>``; or (b) distinct-at-report-time
-    key sets — content digests (cross-batch exact dups!), langs, sources —
-    (kind, value) rows under ``{state_dir}/keys/batch_id=<bid>``. The
-    per-batch work is the SAME gate expressions the batch report runs; no
-    state lives in executor memory, so the dashboard survives restarts with
-    the stream's checkpoint.
-
-    IDEMPOTENT on batch id: foreachBatch is at-least-once, so a batch
-    replayed after a crash must not double-count. Each batch's rows land in
-    their own ``batch_id=<bid>`` partition directory written with
-    ``overwrite`` — a replay rewrites the same partition instead of
-    appending a duplicate, and assembly sums across partitions unchanged
-    (partition discovery surfaces batch_id as a column the report ignores)."""
+    vs the STATIC eval set — one ``counters`` row; or (b)
+    distinct-at-report-time key sets — content digests (cross-batch exact
+    dups!), langs, sources — as (kind, value) ``keys`` rows. The
+    per-batch work is the SAME gate expressions the batch report runs."""
     from ..functions import text as T
     from ..operators.corpus import QUALITY_THRESHOLD
-    from ..operators.text_analysis import (
-        contamination_report_vs,
-        repetition_flags,
-    )
+    from ..operators.text_analysis import contamination_report_vs, repetition_flags
 
     docs = batch_df.filter(F.col("text").isNotNull())
     toks = T.tokens(F.col("text"))
@@ -395,9 +482,6 @@ def quality_state_batch(
         .crossJoin(F.broadcast(n_rep))
         .crossJoin(F.broadcast(n_cont))
     )
-    counters.write.mode("overwrite").parquet(
-        f"{state_dir}/counters/batch_id={batch_id}"
-    )
     keys = (
         docs.select(F.lit("digest").alias("kind"), F.md5("text").alias("value"))
         .unionAll(docs.select(F.lit("lang").alias("kind"), F.col("lang").alias("value")))
@@ -406,21 +490,17 @@ def quality_state_batch(
         )
         .distinct()
     )
-    keys.write.mode("overwrite").parquet(f"{state_dir}/keys/batch_id={batch_id}")
+    QUALITY_STATE.write(state_dir, batch_id, counters=counters, keys=keys)
 
 
 def attach_quality_report_stream(
     stream_docs: DataFrame, bench: DataFrame, state_dir: str, checkpoint: str
-):
-    """Run the incremental dashboard over a document stream (foreachBatch —
-    the multi-aggregate report cannot be one streaming query, which is
+) -> StreamingQuery:
+    """Run the incremental dashboard over a document stream (the
+    multi-aggregate report cannot be one streaming query, which is
     exactly why it decomposes into mergeable state)."""
-    return (
-        stream_docs.writeStream.foreachBatch(
-            lambda batch_df, bid: quality_state_batch(batch_df, bench, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return IncrementalState.attach(
+        stream_docs, checkpoint, quality_state_batch, bench, state_dir
     )
 
 
@@ -428,115 +508,80 @@ def incremental_quality_report(spark: SparkSession, state_dir: str) -> DataFrame
     """Assemble the dashboard from the accumulated state: sum the counter
     rows, count distinct keys per kind. Emits EXACTLY the
     corpus.quality_report_vs schema, and (pytest-proved) exactly its
-    values over the union of all processed batches — including cross-batch
-    exact duplicates, which per-batch reports cannot see. Queried before
-    the first batch has landed (state dirs absent), returns the all-zero
-    report instead of throwing; zero-doc division yields NULL bps."""
-    if not (
-        os.path.isdir(f"{state_dir}/counters") and os.path.isdir(f"{state_dir}/keys")
-    ):
-        return spark.sql(
-            "SELECT CAST(0 AS BIGINT) n_docs, CAST(0 AS BIGINT) n_tokens, "
-            "CAST(NULL AS BIGINT) quality_pass_bp, "
-            "CAST(NULL AS BIGINT) repetition_pass_bp, "
-            "CAST(NULL AS BIGINT) contaminated_bp, "
-            "CAST(0 AS BIGINT) n_exact_dup_docs, "
-            "CAST(0 AS BIGINT) n_langs, CAST(0 AS BIGINT) n_sources"
-        )
-    c = spark.read.parquet(f"{state_dir}/counters").agg(
-        F.sum("n_docs").alias("n_docs"),
-        F.sum("n_tokens").alias("n_tokens"),
-        F.sum("n_quality_pass").alias("n_quality_pass"),
-        F.sum("n_repetition_pass").alias("n_repetition_pass"),
-        F.sum("n_contaminated").alias("n_contaminated"),
-    )
-    keys = spark.read.parquet(f"{state_dir}/keys")
+    values over the union of all processed batches — including
+    cross-batch exact duplicates, which per-batch reports cannot see.
+    With no documents yet (before the first batch, or after only quiet
+    triggers) it is the all-zero report; zero-doc division yields NULL
+    bps."""
 
-    def n_distinct(kind: str, alias: str) -> DataFrame:
+    def merge(p: dict) -> DataFrame:
+        def n_distinct(kind: str, alias: str) -> DataFrame:
+            return (
+                p["keys"].filter(F.col("kind") == kind)
+                .select("value")
+                .distinct()
+                .agg(F.count(F.lit(1)).alias(alias))
+            )
+
         return (
-            keys.filter(F.col("kind") == kind)
-            .select("value")
-            .distinct()
-            .agg(F.count(F.lit(1)).alias(alias))
+            _sum_counters(p["counters"])
+            .crossJoin(F.broadcast(n_distinct("digest", "n_unique_texts")))
+            .crossJoin(F.broadcast(n_distinct("lang", "n_langs")))
+            .crossJoin(F.broadcast(n_distinct("source", "n_sources")))
+            .select(
+                "n_docs",
+                "n_tokens",
+                F.expr("n_quality_pass * 10000 div nullif(n_docs, 0)").alias(
+                    "quality_pass_bp"
+                ),
+                F.expr("n_repetition_pass * 10000 div nullif(n_docs, 0)").alias(
+                    "repetition_pass_bp"
+                ),
+                F.expr("n_contaminated * 10000 div nullif(n_docs, 0)").alias(
+                    "contaminated_bp"
+                ),
+                (F.col("n_docs") - F.col("n_unique_texts")).alias("n_exact_dup_docs"),
+                "n_langs",
+                "n_sources",
+            )
         )
 
-    return (
-        c.crossJoin(F.broadcast(n_distinct("digest", "n_unique_texts")))
-        .crossJoin(F.broadcast(n_distinct("lang", "n_langs")))
-        .crossJoin(F.broadcast(n_distinct("source", "n_sources")))
-        .select(
-            "n_docs",
-            "n_tokens",
-            F.expr("n_quality_pass * 10000 div nullif(n_docs, 0)").alias("quality_pass_bp"),
-            F.expr("n_repetition_pass * 10000 div nullif(n_docs, 0)").alias(
-                "repetition_pass_bp"
-            ),
-            F.expr("n_contaminated * 10000 div nullif(n_docs, 0)").alias("contaminated_bp"),
-            (F.col("n_docs") - F.col("n_unique_texts")).alias("n_exact_dup_docs"),
-            "n_langs",
-            "n_sources",
-        )
-    )
+    return QUALITY_STATE.assemble(spark, state_dir, merge)
 
 
 # ------------------------------------------------- incremental retention
-def retention_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+RETENTION_STATE = IncrementalState(activity="user_id bigint, w timestamp")
+
+
+def retention_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int = -1) -> None:
     """One micro-batch's contribution to the incremental retention
     triangle. The triangle decomposes into ONE piece of mergeable state:
     the distinct (user_id, activity-week) set — both the cohort (a user's
     MIN week) and every offset count are functions of it, and set-union
     merges across batches (a user first seen in batch 0 and active again
     in batch 5 lands in the right offset cell at assembly, which no
-    per-batch triangle can do). Same idempotence contract as
-    quality_state_batch: rows land in a batch_id partition written with
-    overwrite, so an at-least-once replay rewrites instead of
-    double-appending. Expects (user_id, ts, ...)."""
-    acts = batch_df.select(
-        "user_id", F.date_trunc("week", F.col("ts")).alias("w")
-    ).distinct()
-    acts.write.mode("overwrite").parquet(
-        f"{state_dir}/activity/batch_id={batch_id}"
-    )
-
-
-def attach_retention_stream(
-    stream_ev: DataFrame, state_dir: str, checkpoint: str
-):
-    """Run the incremental retention state over an event stream
-    (foreachBatch — min-per-user plus a distinct-join-rollup cannot be one
-    streaming aggregate, which is exactly why it decomposes)."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda batch_df, bid: retention_state_batch(batch_df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    per-batch triangle can do). Expects (user_id, ts, ...)."""
+    acts = batch_df.select("user_id", F.date_trunc("week", F.col("ts")).alias("w"))
+    RETENTION_STATE.write(state_dir, batch_id, activity=acts.distinct())
 
 
 def incremental_retention_triangle(spark: SparkSession, state_dir: str) -> DataFrame:
     """Assemble the triangle from accumulated activity state: re-distinct
-    the unioned (user_id, w) pairs (batch_id partition column dropped),
-    then EXACTLY the batch combinator — so equality with the batch
-    triangle over the union of processed batches holds by construction and
-    is pytest-proved (`test_incremental_retention_equals_batch`)."""
+    the unioned (user_id, w) pairs, then EXACTLY the batch combinator — so
+    equality with the batch triangle over the union of processed batches
+    holds by construction and is pytest-proved
+    (`test_incremental_retention_equals_batch`)."""
     from ..plans.events import retention_triangle_from_activity
 
-    if not os.path.isdir(f"{state_dir}/activity"):
-        # queried before the first batch has landed: the empty triangle,
-        # not AnalysisException (the incremental_quality_report contract)
-        return spark.sql(
-            "SELECT CAST(NULL AS DATE) cohort_week, CAST(NULL AS INT) "
-            "week_offset, CAST(0 AS BIGINT) n_users"
-        ).limit(0)
-    act = (
-        spark.read.parquet(f"{state_dir}/activity")
-        .select("user_id", "w")
-        .distinct()
+    return RETENTION_STATE.assemble(
+        spark, state_dir,
+        lambda p: retention_triangle_from_activity(p["activity"].distinct()),
     )
-    return retention_triangle_from_activity(act)
+
+
+FUNNEL_STATE = IncrementalState(
+    funnel_events="user_id bigint, event_type string, ts timestamp"
+)
 
 
 def funnel_state_batch(
@@ -559,38 +604,11 @@ def funnel_state_batch(
     one. A per-(user, step) min — or any bounded truncation — therefore
     breaks cross-batch ordering; the distinct event-triple set (a small,
     step-filtered fraction of the stream) is the exact lower bound of
-    information the funnel needs. Set-union merges; same
-    ``batch_id=<bid>`` overwrite-partition idempotence contract as
-    quality_state_batch, so an at-least-once replay rewrites instead of
-    double-appending. Expects (user_id, event_type, ts, ...)."""
-    evs = (
-        batch_df.filter(F.col("event_type").isin(*steps))
-        .select("user_id", "event_type", "ts")
-        .distinct()
-    )
-    evs.write.mode("overwrite").parquet(
-        f"{state_dir}/funnel_events/batch_id={batch_id}"
-    )
-
-
-def attach_funnel_stream(
-    stream_ev: DataFrame,
-    state_dir: str,
-    checkpoint: str,
-    steps: tuple[str, ...] = ("view", "click", "purchase"),
-):
-    """Run the incremental funnel state over an event stream (foreachBatch
-    — the chained filtered-min joins cannot be one streaming aggregate,
-    which is exactly why the state/assembly decomposition exists)."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda batch_df, bid: funnel_state_batch(
-                batch_df, state_dir, bid, steps
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    information the funnel needs. Set-union merges. Expects (user_id,
+    event_type, ts, ...)."""
+    steps_only = F.col("event_type").isin(*steps)
+    evs = batch_df.filter(steps_only).select("user_id", "event_type", "ts")
+    FUNNEL_STATE.write(state_dir, batch_id, funnel_events=evs.distinct())
 
 
 def incremental_funnel(
@@ -599,9 +617,9 @@ def incremental_funnel(
     steps: tuple[str, ...] = ("view", "click", "purchase"),
 ) -> DataFrame:
     """Assemble the funnel from accumulated step-event state: re-distinct
-    the unioned triples (batch_id partition column dropped), then EXACTLY
-    the batch combinator — equality with the batch funnel over the union
-    of processed batches holds by construction and is pytest-proved
+    the unioned triples, then EXACTLY the batch combinator — equality with
+    the batch funnel over the union of processed batches holds by
+    construction and is pytest-proved
     (`test_incremental_funnel_equals_batch`), including the cross-batch
     reordering case where a user's click precedes their view until an
     earlier view arrives in a later batch.
@@ -612,19 +630,12 @@ def incremental_funnel(
     count reads low."""
     from ..plans.events import funnel_steps
 
-    if not os.path.isdir(f"{state_dir}/funnel_events"):
-        # queried before the first batch has landed: the empty funnel,
-        # not AnalysisException (the incremental_quality_report contract)
-        return spark.sql(
-            "SELECT CAST(0 AS INT) step, CAST(NULL AS STRING) event_type, "
-            "CAST(0 AS BIGINT) n_users, CAST(0 AS BIGINT) conv_bp"
-        ).limit(0)
-    evs = (
-        spark.read.parquet(f"{state_dir}/funnel_events")
-        .select("user_id", "event_type", "ts")
-        .distinct()
+    return FUNNEL_STATE.assemble(
+        spark, state_dir, lambda p: funnel_steps(p["funnel_events"].distinct(), steps)
     )
-    return funnel_steps(evs, steps)
+
+
+KMV_STATE = IncrementalState(kmv="g string, h bigint")
 
 
 def kmv_state_batch(
@@ -642,8 +653,7 @@ def kmv_state_batch(
     batch) no matter how large the batch. Sound because min-k of a union
     equals min-k of the union of per-batch min-k sets, and below k total
     distinct hashes every batch's set survives truncation intact, so
-    exact mode still sees the true count. Same batch_id overwrite-
-    partition idempotence contract as the other dashboards."""
+    exact mode still sees the true count."""
     from ..plans.events import KMV_K, kmv_hashes
 
     k = k or KMV_K
@@ -654,34 +664,22 @@ def kmv_state_batch(
         .filter(F.col("rn") <= k)
         .select("g", "h")
     )
-    partial.write.mode("overwrite").parquet(
-        f"{state_dir}/kmv/batch_id={batch_id}"
-    )
+    KMV_STATE.write(state_dir, batch_id, kmv=partial)
 
 
 def attach_kmv_stream(
-    stream_ev: DataFrame,
-    state_dir: str,
-    checkpoint: str,
-    group_col: str = "event_type",
-    key_col: str = "user_id",
-):
-    """Run the incremental KMV state over an event stream (foreachBatch —
-    the min-k truncation is a per-batch rank, not a streaming aggregate)."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda batch_df, bid: kmv_state_batch(
-                batch_df, state_dir, bid, group_col, key_col
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
+    stream_ev: DataFrame, state_dir: str, checkpoint: str,
+    group_col: str = "event_type", key_col: str = "user_id",
+) -> StreamingQuery:
+    """Run the incremental KMV state over an event stream (the min-k
+    truncation is a per-batch rank, not a streaming aggregate)."""
+    return IncrementalState.attach(
+        stream_ev, checkpoint, kmv_state_batch, state_dir,
+        group_col=group_col, key_col=key_col,
     )
 
 
-def incremental_kmv(
-    spark: SparkSession, state_dir: str, k: int | None = None
-) -> DataFrame:
+def incremental_kmv(spark: SparkSession, state_dir: str, k: int | None = None) -> DataFrame:
     """Assemble distinct-count estimates from accumulated partial
     sketches: union, re-distinct, then EXACTLY the batch estimator —
     stream == batch equality holds by construction in BOTH regimes
@@ -695,26 +693,22 @@ def incremental_kmv(
     candidate count instead of either valid estimate."""
     from ..plans.events import KMV_K, kmv_estimate_from_hashes
 
-    if not os.path.isdir(f"{state_dir}/kmv"):
-        return spark.sql(
-            "SELECT CAST(NULL AS STRING) g, CAST(0 AS BIGINT) kmv_users"
-        ).limit(0)
-    d = spark.read.parquet(f"{state_dir}/kmv").select("g", "h").distinct()
-    return kmv_estimate_from_hashes(d, k or KMV_K)
+    return KMV_STATE.assemble(
+        spark, state_dir,
+        lambda p: kmv_estimate_from_hashes(p["kmv"].distinct(), k or KMV_K),
+    )
 
 
-def hist_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+HIST_STATE = IncrementalState(hist="event_type string, bin bigint, c bigint")
+
+
+def hist_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int = -1) -> None:
     """One micro-batch's histogram — the purely ADDITIVE sketch state
     (bin counts sum across batches), bounded by |types| x |bins| rows per
-    batch. Same batch_id overwrite-partition idempotence contract as the
-    other incremental dashboards."""
+    batch."""
     from ..plans.events import hist_bin_counts
 
-    hist_bin_counts(batch_df).write.mode("overwrite").parquet(
-        f"{state_dir}/hist/batch_id={batch_id}"
-    )
+    HIST_STATE.write(state_dir, batch_id, hist=hist_bin_counts(batch_df))
 
 
 def incremental_hist_quantiles(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -725,40 +719,28 @@ def incremental_hist_quantiles(spark: SparkSession, state_dir: str) -> DataFrame
     (`test_incremental_hist_quantiles_equals_batch`)."""
     from ..plans.events import hist_quantiles_from_counts
 
-    if not os.path.isdir(f"{state_dir}/hist"):
-        return spark.sql(
-            "SELECT CAST(NULL AS STRING) event_type, CAST(0 AS BIGINT) "
-            "p50_lo_cents, CAST(0 AS BIGINT) p95_lo_cents"
-        ).limit(0)
-    merged = (
-        spark.read.parquet(f"{state_dir}/hist")
-        .groupBy("event_type", "bin")
-        .agg(F.sum("c").alias("c"))
-    )
-    return hist_quantiles_from_counts(merged)
+    return HIST_STATE.assemble(spark, state_dir, lambda p: hist_quantiles_from_counts(
+        p["hist"].groupBy("event_type", "bin").agg(F.sum("c").alias("c"))
+    ))
+
+
+CM_STATE = IncrementalState(
+    cm_counters="j int, c bigint, n bigint", cm_keys="key bigint, exact_count bigint"
+)
 
 
 def cm_state_batch(
-    batch_df: DataFrame,
-    state_dir: str,
-    batch_id: int = -1,
-    key_col: str = "user_id",
+    batch_df: DataFrame, state_dir: str, batch_id: int = -1, key_col: str = "user_id"
 ) -> None:
     """One micro-batch's count-min contribution: the sketch's two
     ADDITIVE partials — the (j, c, n) counter cells (bounded at d*w rows
     per batch) and the per-key counts the top-n answer needs anyway.
     Counter positions are deterministic functions of the key, so they
-    are never stored for the probe side. Same batch_id overwrite-
-    partition idempotence contract as the other dashboards."""
+    are never stored for the probe side."""
     from ..plans.events import cm_partials
 
     counters, key_counts = cm_partials(batch_df, key_col)
-    counters.write.mode("overwrite").parquet(
-        f"{state_dir}/cm_counters/batch_id={batch_id}"
-    )
-    key_counts.write.mode("overwrite").parquet(
-        f"{state_dir}/cm_keys/batch_id={batch_id}"
-    )
+    CM_STATE.write(state_dir, batch_id, cm_counters=counters, cm_keys=key_counts)
 
 
 def incremental_cm_top_users(
@@ -771,37 +753,24 @@ def incremental_cm_top_users(
     (`test_incremental_cm_equals_batch`)."""
     from ..plans.events import cm_finish
 
-    if not os.path.isdir(f"{state_dir}/cm_counters"):
-        return spark.sql(
-            f"SELECT CAST(NULL AS BIGINT) {key_col}, CAST(0 AS BIGINT) "
-            "est_count, CAST(0 AS BIGINT) exact_count, CAST(0 AS BIGINT) overshoot"
-        ).limit(0)
-    counters = (
-        spark.read.parquet(f"{state_dir}/cm_counters")
-        .groupBy("j", "c")
-        .agg(F.sum("n").alias("n"))
-    )
-    key_counts = (
-        spark.read.parquet(f"{state_dir}/cm_keys")
-        .groupBy("key")
-        .agg(F.sum("exact_count").alias("exact_count"))
-    )
-    return cm_finish(counters, key_counts, key_col, top_n=top_n)
+    return CM_STATE.assemble(spark, state_dir, lambda p: cm_finish(
+        p["cm_counters"].groupBy("j", "c").agg(F.sum("n").alias("n")),
+        p["cm_keys"].groupBy("key").agg(F.sum("exact_count").alias("exact_count")),
+        key_col,
+        top_n=top_n,
+    ))
 
 
-def drift_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+DRIFT_STATE = IncrementalState(report=True, drift="event_type string, bin bigint, n bigint")
+
+
+def drift_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int = -1) -> None:
     """One micro-batch's drift-cell contribution — the purely ADDITIVE
     state (per-(type, bin) counts sum across batches), bounded at
-    |types| × DRIFT_N_BINS rows per batch. Same batch_id
-    overwrite-partition idempotence contract as the other incremental
-    dashboards (a replayed batch overwrites itself, never double-counts)."""
+    |types| × DRIFT_N_BINS rows per batch."""
     from ..operators.dataquality import drift_cells
 
-    drift_cells(batch_df, "n").write.mode("overwrite").parquet(
-        f"{state_dir}/drift/batch_id={batch_id}"
-    )
+    DRIFT_STATE.write(state_dir, batch_id, drift=drift_cells(batch_df, "n"))
 
 
 def incremental_events_drift(
@@ -815,64 +784,44 @@ def incremental_events_drift(
     == batch equality is exact and pytest-proved
     (`test_incremental_drift_equals_batch`). Baseline = n_first,
     accumulated stream = n_second, matching dq_events_drift's
-    first/second-half column contract."""
+    first/second-half column contract. Before the first batch: the
+    baseline against an empty stream."""
     from ..operators.dataquality import drift_cells, drift_report
 
-    base_cells = drift_cells(baseline, "n_first")
-    if not os.path.isdir(f"{state_dir}/drift"):
-        cur = base_cells.select(
-            "event_type", "bin", F.lit(0).cast("bigint").alias("n_second")
-        ).limit(0)
-    else:
-        cur = (
-            spark.read.parquet(f"{state_dir}/drift")
-            .groupBy("event_type", "bin")
-            .agg(F.sum("n").alias("n_second"))
-        )
-    cells = (
-        base_cells.join(cur, ["event_type", "bin"], "full_outer")
-        .select(
+    def merge(p: dict) -> DataFrame:
+        cur = p["drift"].groupBy("event_type", "bin").agg(F.sum("n").alias("n_second"))
+        base = drift_cells(baseline, "n_first")
+        cells = base.join(cur, ["event_type", "bin"], "full_outer")
+        return drift_report(cells.select(
             "event_type",
             "bin",
             F.coalesce("n_first", F.lit(0)).alias("n_first"),
             F.coalesce("n_second", F.lit(0)).alias("n_second"),
-        )
-    )
-    return drift_report(cells)
+        ))
+
+    return DRIFT_STATE.assemble(spark, state_dir, merge)
 
 
-def attach_drift_stream(
-    stream_ev: DataFrame, state_dir: str, checkpoint: str
-):
-    """Wire the drift-cell accumulator onto an events stream via
-    foreachBatch (the sink-side assembly every incremental dashboard here
-    uses); read the monitor at any time with incremental_events_drift."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda df, bid: drift_state_batch(df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+def attach_drift_stream(stream_ev: DataFrame, state_dir: str, checkpoint: str):
+    """Wire the drift-cell accumulator onto an events stream; read the
+    monitor at any time with incremental_events_drift."""
+    return IncrementalState.attach(stream_ev, checkpoint, drift_state_batch, state_dir)
 
 
-def hll_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+HLL_STATE = IncrementalState(hll="event_type string, week bigint, day bigint, sk binary")
+
+
+def hll_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int = -1) -> None:
     """One micro-batch's daily HLL sketch contribution (VERDICT r11 #5 —
     the unbounded half of the materialized-sketch pattern): per
     (event_type, week, day) one bounded sketch blob for THIS batch's
-    rows, written under batch_id=N so a replayed batch overwrites itself
-    (the drift twin's overwrite-partition idempotence contract). State is
-    MERGEABLE rather than additive: read-side hll_union_agg is a lossless
-    register-wise max at equal lgConfigK, so partial sketches union to
-    exactly the single-pass sketch — stream == batch holds bit-identical,
-    not approximately."""
+    rows. State is MERGEABLE rather than additive: read-side
+    hll_union_agg is a lossless register-wise max at equal lgConfigK, so
+    partial sketches union to exactly the single-pass sketch — stream ==
+    batch holds bit-identical, not approximately."""
     from ..plans.events import hll_daily_sketches
 
-    hll_daily_sketches(batch_df).write.mode("overwrite").parquet(
-        f"{state_dir}/hll/batch_id={batch_id}"
-    )
+    HLL_STATE.write(state_dir, batch_id, hll=hll_daily_sketches(batch_df))
 
 
 def incremental_hll_weekly(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -884,59 +833,32 @@ def incremental_hll_weekly(spark: SparkSession, state_dir: str) -> DataFrame:
     pytest-proved (`test_incremental_hll_equals_batch`)."""
     from ..plans.events import hll_weekly_rollup
 
-    if not os.path.isdir(f"{state_dir}/hll"):
-        return spark.createDataFrame(
-            [], "event_type string, week bigint, est bigint, n_days bigint"
-        )
-    daily = (
-        spark.read.parquet(f"{state_dir}/hll")
+    return HLL_STATE.assemble(spark, state_dir, lambda p: hll_weekly_rollup(
+        p["hll"]
         .groupBy("event_type", "week", "day")
         .agg(F.expr("hll_union_agg(sk)").alias("sk"))
-    )
-    return hll_weekly_rollup(daily).orderBy("event_type", "week")
+    ).orderBy("event_type", "week"))
 
 
 def attach_hll_stream(stream_ev: DataFrame, state_dir: str, checkpoint: str):
-    """Wire the daily-sketch accumulator onto an events stream via
-    foreachBatch; read the weekly rollup at any time with
-    incremental_hll_weekly."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda df, bid: hll_state_batch(df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    """Wire the daily-sketch accumulator onto an events stream; read the
+    weekly rollup at any time with incremental_hll_weekly."""
+    return IncrementalState.attach(stream_ev, checkpoint, hll_state_batch, state_dir)
 
 
-def gapfill_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+GAPFILL_STATE = IncrementalState(
+    gapfill="event_type string, h timestamp, n bigint, v_cents bigint"
+)
+
+
+def gapfill_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int = -1) -> None:
     """One micro-batch's hourly aggregate for the incremental gap-fill
     dashboard — additive state (counts and cent sums add per (type,
     hour) cell), and COMPLETE state: the grid bounds are min/max of the
-    observed hours, so no separate bounds bookkeeping can drift. Same
-    batch_id overwrite-partition idempotence contract as the other
-    dashboards."""
+    observed hours, so no separate bounds bookkeeping can drift."""
     from ..plans.events import gapfill_hourly_agg
 
-    gapfill_hourly_agg(batch_df).write.mode("overwrite").parquet(
-        f"{state_dir}/gapfill/batch_id={batch_id}"
-    )
-
-
-def attach_gapfill_stream(
-    stream_ev: DataFrame, state_dir: str, checkpoint: str
-):
-    """Run the incremental gap-fill state over an event stream
-    (foreachBatch, the dashboard-family contract)."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda batch_df, bid: gapfill_state_batch(batch_df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    GAPFILL_STATE.write(state_dir, batch_id, gapfill=gapfill_hourly_agg(batch_df))
 
 
 def incremental_gapfill(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -949,17 +871,17 @@ def incremental_gapfill(spark: SparkSession, state_dir: str) -> DataFrame:
     (`test_incremental_gapfill_equals_batch`)."""
     from ..plans.events import gapfill_from_hourly
 
-    if not os.path.isdir(f"{state_dir}/gapfill"):
-        return spark.sql(
-            "SELECT CAST(NULL AS STRING) event_type, CAST(NULL AS TIMESTAMP) "
-            "hour_ts, CAST(0 AS BIGINT) n_events, CAST(0 AS BIGINT) v_cents_locf"
-        ).limit(0)
-    merged = (
-        spark.read.parquet(f"{state_dir}/gapfill")
-        .groupBy("event_type", "h")
-        .agg(F.sum("n").alias("n"), F.sum("v_cents").alias("v_cents"))
-    )
-    return gapfill_from_hourly(merged)
+    return GAPFILL_STATE.assemble(spark, state_dir, lambda p: gapfill_from_hourly(
+        p["gapfill"].groupBy("event_type", "h").agg(F.sum("n").alias("n"),
+                                                     F.sum("v_cents").alias("v_cents"))
+    ))
+
+
+MARKOV_STATE = IncrementalState(
+    carry=("markov_carry",),
+    markov_counts="from_type string, to_type string, n bigint",
+    markov_carry="user_id bigint, ts timestamp, event_id bigint, event_type string",
+)
 
 
 def markov_state_batch(
@@ -976,78 +898,45 @@ def markov_state_batch(
     writes (a) its pair counts (within-batch + boundary, additive) and
     (b) the updated carry — one row per user ever seen, their latest
     (ts, event_id, event_type). The carry is a deterministic CHAIN:
-    carry_b = f(carry_{b-1}, batch_b), each link written under its own
-    batch_id partition, so an at-least-once replay of batch b recomputes
-    from carry_{b-1} and rewrites identical outputs (idempotence without
-    read-modify-write races). Same ordering contract as sessionization:
-    per-user event-time order across batches. An EMPTY batch copies the
-    carry forward so the chain never breaks."""
+    carry_b = f(carry_{b-1}, batch_b), so an at-least-once replay of
+    batch b recomputes from carry_{b-1} and rewrites identical outputs
+    (idempotence without read-modify-write races). Same ordering contract
+    as sessionization: per-user event-time order across batches. An
+    EMPTY batch copies the carry forward so the chain never breaks."""
     from ..plans.events import markov_pair_counts
 
     prev = batch_id - 1 if prev_batch_id is None else prev_batch_id
     within = markov_pair_counts(batch_df)
-
-    lasts = (
-        batch_df.groupBy("user_id")
-        .agg(F.max(F.struct("ts", "event_id", "event_type")).alias("m"))
-        .select("user_id", F.col("m.ts").alias("ts"),
-                F.col("m.event_id").alias("event_id"),
-                F.col("m.event_type").alias("event_type"))
-    )
     firsts = (
         batch_df.groupBy("user_id")
         .agg(F.min(F.struct("ts", "event_id", "event_type")).alias("m"))
         .select("user_id", F.col("m.event_type").alias("first_type"))
     )
-
-    spark = batch_df.sparkSession
-    prev_path = f"{state_dir}/markov_carry/batch_id={prev}"
-    if os.path.isdir(prev_path):
-        carry_prev = spark.read.parquet(prev_path).select(
-            "user_id", "ts", "event_id", "event_type"
+    # before the first batch the carry reads as zero rows: no boundary pairs
+    carry_prev = MARKOV_STATE.read(batch_df.sparkSession, state_dir, "markov_carry", prev)
+    boundary = (
+        carry_prev.join(firsts, "user_id")
+        .groupBy(
+            F.col("event_type").alias("from_type"),
+            F.col("first_type").alias("to_type"),
         )
-        boundary = (
-            carry_prev.join(firsts, "user_id")
-            .groupBy(
-                F.col("event_type").alias("from_type"),
-                F.col("first_type").alias("to_type"),
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        counts = within.unionAll(boundary).groupBy("from_type", "to_type").agg(
-            F.sum("n").alias("n")
-        )
-        carry = (
-            carry_prev.unionAll(lasts)
-            .groupBy("user_id")
-            .agg(F.max(F.struct("ts", "event_id", "event_type")).alias("m"))
-            .select("user_id", F.col("m.ts").alias("ts"),
-                    F.col("m.event_id").alias("event_id"),
-                    F.col("m.event_type").alias("event_type"))
-        )
-    else:
-        counts, carry = within, lasts
-    counts.write.mode("overwrite").parquet(
-        f"{state_dir}/markov_counts/batch_id={batch_id}"
+        .agg(F.count(F.lit(1)).alias("n"))
     )
-    carry.write.mode("overwrite").parquet(
-        f"{state_dir}/markov_carry/batch_id={batch_id}"
+    counts = within.unionAll(boundary).groupBy("from_type", "to_type").agg(
+        F.sum("n").alias("n")
     )
+    carry = (
+        carry_prev.unionAll(batch_df.select(*carry_prev.columns))
+        .groupBy("user_id")
+        .agg(F.max(F.struct("ts", "event_id", "event_type")).alias("m"))
+        .select("user_id", "m.ts", "m.event_id", "m.event_type")
+    )
+    MARKOV_STATE.write(state_dir, batch_id, markov_counts=counts, markov_carry=carry)
 
 
-def attach_markov_stream(
-    stream_ev: DataFrame, state_dir: str, checkpoint: str
-):
-    """Run the incremental Markov state over an event stream (foreachBatch
-    — Structured Streaming's batch ids are sequential per query, which is
-    exactly the carry chain's prev = bid - 1 contract)."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda batch_df, bid: markov_state_batch(batch_df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+def attach_markov_stream(stream_ev: DataFrame, state_dir: str, checkpoint: str):
+    """Run the incremental Markov state over an event stream."""
+    return IncrementalState.attach(stream_ev, checkpoint, markov_state_batch, state_dir)
 
 
 def incremental_markov(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1059,51 +948,23 @@ def incremental_markov(spark: SparkSession, state_dir: str) -> DataFrame:
     (`test_incremental_markov_equals_batch`)."""
     from ..plans.events import markov_from_counts
 
-    if not os.path.isdir(f"{state_dir}/markov_counts"):
-        return spark.sql(
-            "SELECT CAST(NULL AS STRING) from_type, CAST(NULL AS STRING) "
-            "to_type, CAST(0 AS BIGINT) n, CAST(0 AS BIGINT) p_bp"
-        ).limit(0)
-    merged = (
-        spark.read.parquet(f"{state_dir}/markov_counts")
-        .groupBy("from_type", "to_type")
-        .agg(F.sum("n").alias("n"))
-    )
-    return markov_from_counts(merged)
+    return MARKOV_STATE.assemble(spark, state_dir, lambda p: markov_from_counts(
+        p["markov_counts"].groupBy("from_type", "to_type").agg(F.sum("n").alias("n"))
+    ))
 
 
-def rolling7d_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+ROLLING7D_STATE = IncrementalState(rolling_activity="day date, user_id bigint")
+
+
+def rolling7d_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int = -1) -> None:
     """One micro-batch's contribution to the incremental trailing-7-day
     distinct-actives metric: the DISTINCT (day, user_id) activity pairs —
     the same day-granularity reduction the batch query starts from, and
     the minimal sound state (a distinct count cannot be maintained from
     anything less than the distinct set; the reduction bounds state at
-    |days| × |users seen that day|, not raw events). Set-union merges;
-    same batch_id=<bid> overwrite-partition idempotence contract as the
-    retention/funnel states."""
-    du = (
-        batch_df.select(F.to_date("ts").alias("day"), "user_id").distinct()
-    )
-    du.write.mode("overwrite").parquet(
-        f"{state_dir}/rolling_activity/batch_id={batch_id}"
-    )
-
-
-def attach_rolling7d_stream(
-    stream_ev: DataFrame, state_dir: str, checkpoint: str
-):
-    """Run the rolling-actives state over an event stream (foreachBatch —
-    a sliding DISTINCT is not a maintainable streaming aggregate, which
-    is exactly why it decomposes into state + assembly)."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda batch_df, bid: rolling7d_state_batch(batch_df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    |days| × |users seen that day|, not raw events). Set-union merges."""
+    du = batch_df.select(F.to_date("ts").alias("day"), "user_id").distinct()
+    ROLLING7D_STATE.write(state_dir, batch_id, rolling_activity=du)
 
 
 def incremental_rolling_7d(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1114,21 +975,21 @@ def incremental_rolling_7d(spark: SparkSession, state_dir: str) -> DataFrame:
     construction (`test_incremental_rolling7d_equals_batch`)."""
     from ..plans.events import rolling_7d_from_activity
 
-    if not os.path.isdir(f"{state_dir}/rolling_activity"):
-        return spark.sql(
-            "SELECT CAST(NULL AS STRING) day, CAST(0 AS BIGINT) users_7d"
-        ).limit(0)
-    du = (
-        spark.read.parquet(f"{state_dir}/rolling_activity")
-        .select("day", "user_id")
-        .distinct()
+    return ROLLING7D_STATE.assemble(
+        spark, state_dir,
+        lambda p: rolling_7d_from_activity(p["rolling_activity"].distinct()),
     )
-    return rolling_7d_from_activity(du)
+
+
+JOURNEY_STATE = IncrementalState(
+    carry=("journey_carry",),
+    journey_carry="user_id bigint, journey string, n_events bigint",
+)
 
 
 def journey_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int, prev_batch_id=None
-):
+    batch_df: DataFrame, state_dir: str, batch_id: int = -1, prev_batch_id=None
+) -> None:
     """Append-only ordered-string carry — a new member of the incremental
     state taxonomy (beside additive counts, min-k, derived bounds, and the
     Markov carry pair): per user, the event-initial journey string so far.
@@ -1139,8 +1000,8 @@ def journey_state_batch(
     their string; new users start fresh). Shares the carry chains'
     contract: micro-batches arrive in event-time order per user (ingestion
     replay order) and batch ids are sequential (foreachBatch guarantee).
-    Replay-idempotent: carry(b) is a pure function of carry(b-1) and batch
-    b, and per-batch dirs are overwritten in place.
+    Replay-idempotent: carry(b) is a pure function of carry(b-1) and
+    batch b.
 
     State size: one row per user, string bounded by that user's own
     history — identical to the batch collect_list bound; the merge is one
@@ -1148,46 +1009,23 @@ def journey_state_batch(
     from ..plans.sequences import journey_strings
 
     prev = batch_id - 1 if prev_batch_id is None else prev_batch_id
-    base = batch_df.select(
-        "user_id", "ts", "event_id", F.substring("event_type", 1, 1).alias("ch")
+    ch = F.substring("event_type", 1, 1).alias("ch")
+    within = journey_strings(batch_df.select("user_id", "ts", "event_id", ch))
+    p = JOURNEY_STATE.read(batch_df.sparkSession, state_dir, "journey_carry", prev).select(
+        "user_id", F.col("journey").alias("p_journey"), F.col("n_events").alias("p_n")
     )
-    within = journey_strings(base)
-
-    spark = batch_df.sparkSession
-    prev_path = f"{state_dir}/journey_carry/batch_id={prev}"
-    if os.path.isdir(prev_path):
-        p = spark.read.parquet(prev_path).select(
-            "user_id",
-            F.col("journey").alias("p_journey"),
-            F.col("n_events").alias("p_n"),
-        )
-        carry = p.join(within, "user_id", "full_outer").select(
-            "user_id",
-            F.concat(
-                F.coalesce("p_journey", F.lit("")),
-                F.coalesce("journey", F.lit("")),
-            ).alias("journey"),
-            (
-                F.coalesce("p_n", F.lit(0)) + F.coalesce("n_events", F.lit(0))
-            ).alias("n_events"),
-        )
-    else:
-        carry = within
-    carry.write.mode("overwrite").parquet(
-        f"{state_dir}/journey_carry/batch_id={batch_id}"
+    carry = p.join(within, "user_id", "full_outer").select(
+        "user_id",
+        F.concat(F.coalesce("p_journey", F.lit("")), F.coalesce("journey", F.lit("")))
+        .alias("journey"),
+        (F.coalesce("p_n", F.lit(0)) + F.coalesce("n_events", F.lit(0))).alias("n_events"),
     )
+    JOURNEY_STATE.write(state_dir, batch_id, journey_carry=carry)
 
 
 def attach_journey_stream(stream_ev: DataFrame, state_dir: str, checkpoint: str):
-    """Run the journey carry over an event stream (foreachBatch — batch
-    ids are sequential per query, the prev = bid - 1 contract)."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda batch_df, bid: journey_state_batch(batch_df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    """Run the journey carry over an event stream."""
+    return IncrementalState.attach(stream_ev, checkpoint, journey_state_batch, state_dir)
 
 
 def incremental_journey(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1197,20 +1035,9 @@ def incremental_journey(spark: SparkSession, state_dir: str) -> DataFrame:
     (`test_incremental_journey_equals_batch`)."""
     from ..plans.sequences import journey_finisher
 
-    root = f"{state_dir}/journey_carry"
-    if not os.path.isdir(root):
-        return spark.sql(
-            "SELECT CAST(NULL AS BIGINT) user_id, CAST(0 AS BIGINT) n_events, "
-            "CAST(0 AS BIGINT) journey_len, CAST(NULL AS STRING) journey_md5, "
-            "CAST(0 AS BIGINT) n_quick_convert, CAST(0 AS INT) starts_signup, "
-            "CAST(0 AS INT) has_assisted_convert"
-        ).limit(0)
-    latest = max(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(root)
-        if d.startswith("batch_id=")
+    return JOURNEY_STATE.assemble(
+        spark, state_dir, lambda p: journey_finisher(p["journey_carry"])
     )
-    return journey_finisher(spark.read.parquet(f"{root}/batch_id={latest}"))
 
 
 # -------------------------------------------------- observed ETL metrics
@@ -1292,6 +1119,14 @@ def with_srm_metrics(
 
 
 # ----------------------------------------------- incremental data quality
+DQ_STATE = IncrementalState(
+    report=True,
+    counters="not_null_custkey bigint, positive_totalprice bigint, "
+    "status_in_domain bigint, orderdate_in_range bigint, fk_custkey_customer bigint",
+    keys="o_orderkey bigint, n bigint",
+)
+
+
 def dq_state_batch(
     batch_orders: DataFrame, customer: DataFrame, state_dir: str, batch_id: int = -1
 ) -> None:
@@ -1299,17 +1134,15 @@ def dq_state_batch(
     monitor (the streaming twin of operators/dataquality.py's suite).
     Decomposition: the scan checks (null FK, range, domain, date) and the
     referential-integrity anti join vs the STATIC parent are SUMMABLE
-    counters — one row per batch under ``counters/batch_id=<bid>``; key
-    UNIQUENESS is not additive (a duplicate can straddle batches), so each
-    batch lands its per-key counts under ``keys/batch_id=<bid>`` and the
-    assembly takes total-minus-distinct across ALL state — exactly the
-    digest-set move the quality dashboard uses for cross-batch exact
-    dups. Idempotent on batch id (overwrite per partition — the
-    at-least-once foreachBatch discipline)."""
+    counters — one ``counters`` row per batch; key UNIQUENESS is not
+    additive (a duplicate can straddle batches), so each batch lands its
+    per-key counts as ``keys`` and the assembly takes total-minus-distinct
+    across ALL state — exactly the digest-set move the quality dashboard
+    uses for cross-batch exact dups."""
     from ..operators.dataquality import ORDER_STATUSES
 
     o = batch_orders
-    in_domain = F.col("o_orderstatus").isin(*ORDER_STATUSES)
+    in_domain = F.coalesce(F.col("o_orderstatus").isin(*ORDER_STATUSES), F.lit(False))
     orphans = (
         o.filter(F.col("o_custkey").isNotNull())
         .join(
@@ -1319,47 +1152,27 @@ def dq_state_batch(
         )
         .agg(F.count(F.lit(1)).cast("long").alias("fk_custkey_customer"))
     )
+    # count_if, not sum(when(...)): a quiet trigger's counters are 0, not NULL
     counters = o.agg(
-        F.sum(F.when(F.col("o_custkey").isNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("not_null_custkey"),
-        F.sum(
-            F.when(F.col("o_totalprice").isNotNull() & (F.col("o_totalprice") <= 0), 1)
-            .otherwise(0)
-        )
-        .cast("long")
-        .alias("positive_totalprice"),
-        F.sum(F.when(~F.coalesce(in_domain, F.lit(False)), 1).otherwise(0))
-        .cast("long")
-        .alias("status_in_domain"),
-        F.sum(
-            F.when(
-                (F.col("o_orderdate") < F.lit("1990-01-01").cast("timestamp"))
-                | (F.col("o_orderdate") >= F.lit("2100-01-01").cast("timestamp")),
-                1,
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("orderdate_in_range"),
+        F.count_if(F.col("o_custkey").isNull()).alias("not_null_custkey"),
+        F.count_if(F.col("o_totalprice") <= 0).alias("positive_totalprice"),
+        F.count_if(~in_domain).alias("status_in_domain"),
+        F.count_if(
+            (F.col("o_orderdate") < F.lit("1990-01-01").cast("timestamp"))
+            | (F.col("o_orderdate") >= F.lit("2100-01-01").cast("timestamp"))
+        ).alias("orderdate_in_range"),
     ).crossJoin(F.broadcast(orphans))
-    counters.write.mode("overwrite").parquet(
-        f"{state_dir}/counters/batch_id={batch_id}"
-    )
     keys = o.groupBy("o_orderkey").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    keys.write.mode("overwrite").parquet(f"{state_dir}/keys/batch_id={batch_id}")
+    DQ_STATE.write(state_dir, batch_id, counters=counters, keys=keys)
 
 
 def attach_dq_stream(
     stream_orders: DataFrame, customer: DataFrame, state_dir: str, checkpoint: str
 ):
-    """Run the data-quality monitor over an orders stream (foreachBatch —
-    the multi-aggregate suite decomposes into mergeable state)."""
-    return (
-        stream_orders.writeStream.foreachBatch(
-            lambda batch_df, bid: dq_state_batch(batch_df, customer, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
+    """Run the data-quality monitor over an orders stream (the
+    multi-aggregate suite decomposes into mergeable state)."""
+    return IncrementalState.attach(
+        stream_orders, checkpoint, dq_state_batch, customer, state_dir
     )
 
 
@@ -1367,47 +1180,33 @@ def incremental_dq(spark: SparkSession, state_dir: str) -> DataFrame:
     """Assemble the constraint suite from accumulated state — EXACTLY
     dq_orders_constraints' schema and (pytest-proved) its values over the
     union of all processed batches, including cross-batch duplicate keys
-    no per-batch check can see. Before the first batch: the all-pass
-    zero report."""
-    if not (
-        os.path.isdir(f"{state_dir}/counters") and os.path.isdir(f"{state_dir}/keys")
-    ):
-        names = [
-            "fk_custkey_customer", "not_null_custkey", "orderdate_in_range",
-            "positive_totalprice", "status_in_domain", "unique_orderkey",
-        ]
-        return spark.createDataFrame(
-            [(n, 0, True) for n in names],
-            "check_name string, n_violations long, pass boolean",
+    no per-batch check can see. With no orders yet (before the first
+    batch, or after only quiet triggers): the all-pass zero report."""
+
+    def merge(p: dict) -> DataFrame:
+        k = p["keys"].agg(
+            F.coalesce(F.sum("n") - F.countDistinct("o_orderkey"), F.lit(0))
+            .cast("long")
+            .alias("unique_orderkey")
         )
-    c = spark.read.parquet(f"{state_dir}/counters").agg(
-        F.sum("not_null_custkey").cast("long").alias("not_null_custkey"),
-        F.sum("positive_totalprice").cast("long").alias("positive_totalprice"),
-        F.sum("status_in_domain").cast("long").alias("status_in_domain"),
-        F.sum("orderdate_in_range").cast("long").alias("orderdate_in_range"),
-        F.sum("fk_custkey_customer").cast("long").alias("fk_custkey_customer"),
-    )
-    k = spark.read.parquet(f"{state_dir}/keys").agg(
-        (F.sum("n") - F.countDistinct("o_orderkey"))
-        .cast("long")
-        .alias("unique_orderkey")
-    )
-    wide = c.crossJoin(F.broadcast(k))
-    long = wide.selectExpr(
-        "stack(6, "
-        "'fk_custkey_customer', fk_custkey_customer, "
-        "'not_null_custkey', not_null_custkey, "
-        "'orderdate_in_range', orderdate_in_range, "
-        "'positive_totalprice', positive_totalprice, "
-        "'status_in_domain', status_in_domain, "
-        "'unique_orderkey', unique_orderkey"
-        ") AS (check_name, n_violations)"
-    )
-    return long.select(
-        "check_name",
-        "n_violations",
-        (F.col("n_violations") == 0).alias("pass"),
-    ).orderBy("check_name")
+        wide = _sum_counters(p["counters"]).crossJoin(F.broadcast(k))
+        long = wide.selectExpr(
+            "stack(6, "
+            "'fk_custkey_customer', fk_custkey_customer, "
+            "'not_null_custkey', not_null_custkey, "
+            "'orderdate_in_range', orderdate_in_range, "
+            "'positive_totalprice', positive_totalprice, "
+            "'status_in_domain', status_in_domain, "
+            "'unique_orderkey', unique_orderkey"
+            ") AS (check_name, n_violations)"
+        )
+        return long.select(
+            "check_name",
+            "n_violations",
+            (F.col("n_violations") == 0).alias("pass"),
+        ).orderBy("check_name")
+
+    return DQ_STATE.assemble(spark, state_dir, merge)
 
 
 # --------------------------------------------------------------- maintenance
@@ -1517,21 +1316,20 @@ def purge_keys(spark: SparkSession, path: str, key_col: str, keys) -> int:
     return before - spark.read.parquet(path).count()
 
 
-def cascade_state_batch(
-    batch_docs: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+CASCADE_STATE = IncrementalState(
+    cascade="source string, decision string, n_docs bigint, tot_tokens bigint"
+)
+
+
+def cascade_state_batch(batch_docs: DataFrame, state_dir: str, batch_id: int = -1) -> None:
     """One micro-batch's filter-cascade funnel contribution (r12): the
-    per-(source, decision) cells for THIS batch's documents, written
-    under batch_id=N (the overwrite-partition idempotence contract — a
-    replayed batch overwrites itself, never double-counts). State is
+    per-(source, decision) cells for THIS batch's documents. State is
     purely ADDITIVE and bounded at |sources| x 6 rows per batch: the
     cascade decision is per-document scan-local, so disjoint batches
     contribute independent cells."""
     from ..operators.corpus import cascade_cells
 
-    cascade_cells(batch_docs).write.mode("overwrite").parquet(
-        f"{state_dir}/cascade/batch_id={batch_id}"
-    )
+    CASCADE_STATE.write(state_dir, batch_id, cascade=cascade_cells(batch_docs))
 
 
 def incremental_filter_cascade(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1541,50 +1339,36 @@ def incremental_filter_cascade(spark: SparkSession, state_dir: str) -> DataFrame
     (`test_incremental_cascade_equals_batch`). The live twin of the
     gated funnel dashboard: as crawl shards land, the keep/reject
     breakdown stays current without re-scanning the corpus."""
-    if not os.path.isdir(f"{state_dir}/cascade"):
-        return spark.sql(
-            "SELECT CAST(NULL AS STRING) source, CAST(NULL AS STRING) decision, "
-            "CAST(0 AS BIGINT) n_docs, CAST(0 AS BIGINT) tot_tokens"
-        ).limit(0)
-    return (
-        spark.read.parquet(f"{state_dir}/cascade")
-        .groupBy("source", "decision")
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("tot_tokens").alias("tot_tokens"),
-        )
-        .orderBy("source", "decision")
-    )
+    return CASCADE_STATE.assemble(spark, state_dir, lambda p: p["cascade"].groupBy(
+        "source", "decision"
+    ).agg(
+        F.sum("n_docs").alias("n_docs"), F.sum("tot_tokens").alias("tot_tokens")
+    ).orderBy("source", "decision"))
 
 
 def attach_cascade_stream(stream_docs: DataFrame, state_dir: str, checkpoint: str):
-    """Wire the cascade-cell accumulator onto a document stream via
-    foreachBatch (the dashboard-family contract); read the funnel at any
-    time with incremental_filter_cascade."""
-    return (
-        stream_docs.writeStream.foreachBatch(
-            lambda df, bid: cascade_state_batch(df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    """Wire the cascade-cell accumulator onto a document stream; read the
+    funnel at any time with incremental_filter_cascade."""
+    return IncrementalState.attach(stream_docs, checkpoint, cascade_state_batch, state_dir)
+
+
+SOURCE_CAP_STATE = IncrementalState(source_cap="doc_id bigint, source string, q_ppm bigint")
 
 
 def source_cap_state_batch(
     batch_docs: DataFrame, state_dir: str, batch_id: int = -1
 ) -> None:
     """One micro-batch's per-source cap candidates (r12): THIS batch's
-    quality-top-K per source, written under batch_id=N (overwrite-
-    partition idempotence). State is MERGEABLE by re-ranking rather than
-    additive: because batches partition the corpus, the global top-K per
-    source is a subset of the union of per-batch top-Ks (any row in the
-    global top-K is in the top-K of its own batch a fortiori), so keeping
-    K rows per (source, batch) is lossless for the cap — bounded at
-    K x |sources| per batch regardless of batch size."""
+    quality-top-K per source. State is MERGEABLE by re-ranking rather
+    than additive: because batches partition the corpus, the global top-K
+    per source is a subset of the union of per-batch top-Ks (any row in
+    the global top-K is in the top-K of its own batch a fortiori), so
+    keeping K rows per (source, batch) is lossless for the cap — bounded
+    at K x |sources| per batch regardless of batch size."""
     from ..operators.corpus import source_cap_candidates
 
-    source_cap_candidates(batch_docs).write.mode("overwrite").parquet(
-        f"{state_dir}/source_cap/batch_id={batch_id}"
+    SOURCE_CAP_STATE.write(
+        state_dir, batch_id, source_cap=source_cap_candidates(batch_docs)
     )
 
 
@@ -1596,33 +1380,16 @@ def incremental_source_cap(spark: SparkSession, state_dir: str) -> DataFrame:
     argument above (`test_incremental_source_cap_equals_batch`)."""
     from ..operators.corpus import source_cap_rank
 
-    if not os.path.isdir(f"{state_dir}/source_cap"):
-        return spark.sql(
-            "SELECT CAST(NULL AS BIGINT) doc_id, CAST(NULL AS STRING) source, "
-            "CAST(0 AS BIGINT) q_ppm, CAST(0 AS INT) q_rank"
-        ).limit(0)
-    survivors = spark.read.parquet(f"{state_dir}/source_cap").select(
-        "doc_id", "source", "q_ppm"
-    )
-    return source_cap_rank(survivors).orderBy("source", "q_rank")
-
-
-def attach_source_cap_stream(
-    stream_docs: DataFrame, state_dir: str, checkpoint: str
-):
-    """Wire the per-batch cap-candidate accumulator onto a document
-    stream via foreachBatch; read the live keeper set at any time with
-    incremental_source_cap."""
-    return (
-        stream_docs.writeStream.foreachBatch(
-            lambda df, bid: source_cap_state_batch(df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return SOURCE_CAP_STATE.assemble(
+        spark, state_dir,
+        lambda p: source_cap_rank(p["source_cap"]).orderBy("source", "q_rank"),
     )
 
 
 # ------------------------------------------- IVF index maintenance (r13)
+IVF_ASSIGN_STATE = IncrementalState(
+    report=True, ivf_assign="vec_id bigint, cell int, cos_ppm bigint"
+)
 
 
 def ivf_assign_state_batch(
@@ -1631,38 +1398,24 @@ def ivf_assign_state_batch(
     """One micro-batch of ARRIVING vectors assigned to the FROZEN coarse
     quantizer persisted at ``{index_path}/centroids`` (the materialized
     IVF index of operators/similarity.write_ivf_index): per-vector
-    nearest-cell argmax plus the exact ppm cosine fit, written under a
-    ``batch_id=`` partition with mode("overwrite") — the idempotence
-    contract every incremental_* dashboard shares, so a replayed batch
-    REPLACES its own partition instead of double-counting. Expects
-    (vec_id, embedding array<float>). VERDICT r12 #5."""
+    nearest-cell argmax plus the exact ppm cosine fit. Expects (vec_id,
+    embedding array<float>). VERDICT r12 #5."""
     from ..functions.vectors import as_double_array
     from ..operators.similarity import ivf_assign_cells
 
-    spark = batch_df.sparkSession
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    new_emb = batch_df.select(
-        "vec_id", as_double_array("embedding").alias("v")
-    )
-    ivf_assign_cells(new_emb, cents).write.mode("overwrite").parquet(
-        f"{state_dir}/ivf_assign/batch_id={batch_id}"
-    )
+    cents = batch_df.sparkSession.read.parquet(f"{index_path}/centroids")
+    new_emb = batch_df.select("vec_id", as_double_array("embedding").alias("v"))
+    IVF_ASSIGN_STATE.write(state_dir, batch_id, ivf_assign=ivf_assign_cells(new_emb, cents))
 
 
 def attach_ivf_assign_stream(
     stream_vec: DataFrame, index_path: str, state_dir: str, checkpoint: str
 ) -> StreamingQuery:
     """Wire frozen-quantizer cell assignment onto an arriving-vector
-    stream via foreachBatch; read the live staleness report at any time
-    with incremental_ivf_staleness."""
-    return (
-        stream_vec.writeStream.foreachBatch(
-            lambda df, bid: ivf_assign_state_batch(
-                df, index_path, state_dir, bid
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
+    stream; read the live staleness report at any time with
+    incremental_ivf_staleness."""
+    return IncrementalState.attach(
+        stream_vec, checkpoint, ivf_assign_state_batch, index_path, state_dir
     )
 
 
@@ -1678,7 +1431,8 @@ def incremental_ivf_staleness(
     fits are batch-independent (the quantizer is frozen) and the BIGINT
     sums are associative, so batch boundaries cannot matter
     (`test_incremental_ivf_staleness_equals_batch`). A rising
-    staleness_ppm is the rebuild-cadence alert."""
+    staleness_ppm is the rebuild-cadence alert. Before the first batch:
+    the training side against no arrivals."""
     from ..operators.similarity import _cos_ppm, ivf_staleness_report
 
     cents = spark.read.parquet(f"{index_path}/centroids")
@@ -1690,13 +1444,12 @@ def incremental_ivf_staleness(
             _cos_ppm(F.col("v"), F.col("c")).alias("cos_ppm"),
         )
     )
-    if os.path.isdir(f"{state_dir}/ivf_assign"):
-        new_sc = spark.read.parquet(f"{state_dir}/ivf_assign").select(
-            "cell", "cos_ppm"
-        )
-    else:
-        new_sc = spark.createDataFrame([], "cell int, cos_ppm long")
-    return ivf_staleness_report(base_sc, new_sc)
+    return IVF_ASSIGN_STATE.assemble(spark, state_dir, lambda p: ivf_staleness_report(
+        base_sc, p["ivf_assign"].select("cell", "cos_ppm")
+    ))
+
+
+KCENTER_STATE = IncrementalState(kcenter="label int, vec_id bigint, cos_ppm bigint")
 
 
 def kcenter_state_batch(
@@ -1711,26 +1464,19 @@ def kcenter_state_batch(
     batch's per-cell top (resp. bottom) take, so keeping each batch's
     two-sided take — ≤ |cells|·(core+frontier) rows of state per batch,
     corpus-size-independent — loses no candidate the global selection
-    can ever pick. Expects (vec_id, label, embedding array<float>);
-    state written under a ``batch_id=`` partition with the
-    overwrite-idempotence contract of the dashboard family."""
+    can ever pick. Expects (vec_id, label, embedding array<float>)."""
     from ..functions.vectors import as_double_array
     from ..operators.similarity import _cos_ppm, kcenter_sample
 
     scored = (
-        batch_emb.select(
-            "vec_id", "label", as_double_array("embedding").alias("v")
-        )
+        batch_emb.select("vec_id", "label", as_double_array("embedding").alias("v"))
         .join(F.broadcast(cents), "label")
         .select("vec_id", "label", _cos_ppm(F.col("v"), F.col("c")).alias("cos_ppm"))
     )
     # the batch's own two-sided take IS the bounded candidate set; roles
     # and ranks recompute at assembly over the merged candidates
-    kcenter_sample(scored).select(
-        F.col("cell").alias("label"), "vec_id", "cos_ppm"
-    ).write.mode("overwrite").parquet(
-        f"{state_dir}/kcenter/batch_id={batch_id}"
-    )
+    take = kcenter_sample(scored).select(F.col("cell").alias("label"), "vec_id", "cos_ppm")
+    KCENTER_STATE.write(state_dir, batch_id, kcenter=take)
 
 
 def incremental_kcenter_sample(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1739,54 +1485,38 @@ def incremental_kcenter_sample(spark: SparkSession, state_dir: str) -> DataFrame
     the merged (vec_id, label, cos_ppm) candidate set. Distributivity of
     two-sided per-cell top-k (see kcenter_state_batch) makes this equal
     the batch selection over the full corpus against the same frozen
-    quantizer (`test_incremental_kcenter_equals_batch`); a replayed
-    batch REPLACES its own partition, and cross-batch duplicate vec_ids
-    are deduped before ranking (at-least-once delivery must not let one
-    vector hold two ranks)."""
+    quantizer (`test_incremental_kcenter_equals_batch`); cross-batch
+    duplicate vec_ids are deduped before ranking (at-least-once delivery
+    must not let one vector hold two ranks)."""
     from ..operators.similarity import kcenter_sample
 
-    if not os.path.isdir(f"{state_dir}/kcenter"):
-        return spark.createDataFrame(
-            [],
-            "cell int, vec_id long, cos_ppm long, role string, pick_rank long",
-        )
-    cand = (
-        spark.read.parquet(f"{state_dir}/kcenter")
-        .select("vec_id", "label", "cos_ppm")
-        .distinct()
-    )
-    return kcenter_sample(cand)
+    return KCENTER_STATE.assemble(spark, state_dir, lambda p: kcenter_sample(
+        p["kcenter"].select("vec_id", "label", "cos_ppm").distinct()
+    ))
 
 
 # --------------------------------------------- CUSUM change-points (r13)
+CUSUM_STATE = IncrementalState(cusum="event_type string, day string, v_cents bigint")
 
 
-def cusum_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+def cusum_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int = -1) -> None:
     """One micro-batch's per-(event_type, day) value-cent sums — ADDITIVE
-    state (cents add per cell), written under a batch_id= partition with
-    the overwrite idempotence contract of the dashboard family."""
+    state (cents add per cell)."""
     from ..plans.events import cusum_daily_agg
 
-    cusum_daily_agg(batch_df).write.mode("overwrite").parquet(
-        f"{state_dir}/cusum/batch_id={batch_id}"
-    )
+    CUSUM_STATE.write(state_dir, batch_id, cusum=cusum_daily_agg(batch_df))
 
 
 def attach_cusum_stream(
     stream_ev: DataFrame, state_dir: str, checkpoint: str
 ) -> StreamingQuery:
-    """Wire the daily-cell accumulator onto an events stream via
-    foreachBatch; read the live change-point report at any time with
-    incremental_cusum."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda df, bid: cusum_state_batch(df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    """Wire the daily-cell accumulator onto an events stream; read the
+    live change-point report at any time with incremental_cusum."""
+    return IncrementalState.attach(stream_ev, checkpoint, cusum_state_batch, state_dir)
+
+
+def _daily_cents(p: dict) -> DataFrame:
+    return p["cusum"].groupBy("event_type", "day").agg(F.sum("v_cents").alias("v_cents"))
 
 
 def incremental_cusum(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1797,18 +1527,7 @@ def incremental_cusum(spark: SparkSession, state_dir: str) -> DataFrame:
     boundaries cannot matter (`test_incremental_cusum_equals_batch`)."""
     from ..plans.events import cusum_flag
 
-    if not os.path.isdir(f"{state_dir}/cusum"):
-        return spark.createDataFrame(
-            [],
-            "event_type string, day string, v_cents long, s_up long, "
-            "s_dn long, direction string",
-        )
-    daily = (
-        spark.read.parquet(f"{state_dir}/cusum")
-        .groupBy("event_type", "day")
-        .agg(F.sum("v_cents").alias("v_cents"))
-    )
-    return cusum_flag(daily)
+    return CUSUM_STATE.assemble(spark, state_dir, lambda p: cusum_flag(_daily_cents(p)))
 
 
 def incremental_seasonal_backtest(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1821,31 +1540,20 @@ def incremental_seasonal_backtest(spark: SparkSession, state_dir: str) -> DataFr
     (`test_incremental_seasonal_backtest_equals_batch`)."""
     from ..plans.events import seasonal_backtest
 
-    if not os.path.isdir(f"{state_dir}/cusum"):
-        return spark.createDataFrame(
-            [],
-            "event_type string, n_days_scored long, sae_seasonal_cents long, "
-            "sae_naive1_cents long, mase double",
-        )
-    daily = (
-        spark.read.parquet(f"{state_dir}/cusum")
-        .groupBy("event_type", "day")
-        .agg(F.sum("v_cents").alias("v_cents"))
+    return CUSUM_STATE.assemble(
+        spark, state_dir, lambda p: seasonal_backtest(_daily_cents(p))
     )
-    return seasonal_backtest(daily)
 
 
-def did_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+DID_STATE = IncrementalState(did="treat boolean, day timestamp, n bigint, s bigint")
+
+
+def did_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int = -1) -> None:
     """One micro-batch's per-(arm, day) DiD cells — ADDITIVE state (n/s
-    add per cell), written under a batch_id= partition with the
-    overwrite idempotence contract of the dashboard family."""
+    add per cell)."""
     from ..plans.experiments import did_daily_agg
 
-    did_daily_agg(batch_df).write.mode("overwrite").parquet(
-        f"{state_dir}/did/batch_id={batch_id}"
-    )
+    DID_STATE.write(state_dir, batch_id, did=did_daily_agg(batch_df))
 
 
 def incremental_did_lift(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1858,35 +1566,22 @@ def incremental_did_lift(spark: SparkSession, state_dir: str) -> DataFrame:
     would (`test_incremental_did_lift_equals_batch`)."""
     from ..plans.experiments import did_lift_report
 
-    if not os.path.isdir(f"{state_dir}/did"):
-        return spark.createDataFrame(
-            [],
-            "experiment string, n_pre_ctrl long, s_pre_ctrl long, "
-            "n_pre_treat long, s_pre_treat long, n_post_ctrl long, "
-            "s_post_ctrl long, n_post_treat long, s_post_treat long, "
-            "did_milli_centi long",
-        )
-    cells = (
-        spark.read.parquet(f"{state_dir}/did")
-        .groupBy("treat", "day")
-        .agg(F.sum("n").alias("n"), F.sum("s").alias("s"))
-    )
-    return did_lift_report(cells)
+    return DID_STATE.assemble(spark, state_dir, lambda p: did_lift_report(
+        p["did"].groupBy("treat", "day").agg(F.sum("n").alias("n"), F.sum("s").alias("s"))
+    ))
 
 
-def cuped_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+CUPED_STATE = IncrementalState(cuped="user_id bigint, day timestamp, s bigint")
+
+
+def cuped_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int = -1) -> None:
     """One micro-batch's per-(user, day) CUPED cells — ADDITIVE state
-    (n/s add per cell), written under a batch_id= partition with the
-    overwrite idempotence contract. One key finer than the DiD cells
-    because CUPED's finisher needs per-USER pre/post sums; arms need no
-    state at all (re-derived from user_id by the deterministic hash)."""
+    (sums add per cell). One key finer than the DiD cells because CUPED's
+    finisher needs per-USER pre/post sums; arms need no state at all
+    (re-derived from user_id by the deterministic hash)."""
     from ..plans.experiments import cuped_user_day_agg
 
-    cuped_user_day_agg(batch_df).write.mode("overwrite").parquet(
-        f"{state_dir}/cuped/batch_id={batch_id}"
-    )
+    CUPED_STATE.write(state_dir, batch_id, cuped=cuped_user_day_agg(batch_df))
 
 
 def incremental_cuped(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1899,32 +1594,20 @@ def incremental_cuped(spark: SparkSession, state_dir: str) -> DataFrame:
     (`test_incremental_cuped_equals_batch`)."""
     from ..plans.experiments import cuped_report
 
-    if not os.path.isdir(f"{state_dir}/cuped"):
-        return spark.createDataFrame(
-            [],
-            "experiment string, n_users long, n_treat long, n_ctrl long, "
-            "theta_milli long, lift_raw_milli_centi long, "
-            "lift_adj_milli_centi long, var_reduction_ppm long",
-        )
-    cells = (
-        spark.read.parquet(f"{state_dir}/cuped")
-        .groupBy("user_id", "day")
-        .agg(F.sum("s").alias("s"))
-    )
-    return cuped_report(cells)
+    return CUPED_STATE.assemble(spark, state_dir, lambda p: cuped_report(
+        p["cuped"].groupBy("user_id", "day").agg(F.sum("s").alias("s"))
+    ))
 
 
-def epoch_state_batch(
-    batch_docs: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+EPOCH_STATE = IncrementalState(epoch="source string, n_docs bigint, n_tokens bigint")
+
+
+def epoch_state_batch(batch_docs: DataFrame, state_dir: str, batch_id: int = -1) -> None:
     """One micro-batch's per-source epoch-planning cells — ADDITIVE
-    state (doc/token counts add per source), written under a batch_id=
-    partition with the overwrite idempotence contract."""
+    state (doc/token counts add per source)."""
     from ..operators.corpus import epoch_source_agg
 
-    epoch_source_agg(batch_docs).write.mode("overwrite").parquet(
-        f"{state_dir}/epoch/batch_id={batch_id}"
-    )
+    EPOCH_STATE.write(state_dir, batch_id, epoch=epoch_source_agg(batch_docs))
 
 
 def incremental_epoch_schedule(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1937,33 +1620,25 @@ def incremental_epoch_schedule(spark: SparkSession, state_dir: str) -> DataFrame
     the batch op would (`test_incremental_epoch_schedule_equals_batch`)."""
     from ..operators.corpus import epoch_schedule_report
 
-    if not os.path.isdir(f"{state_dir}/epoch"):
-        return spark.createDataFrame(
-            [],
-            "source string, n_docs long, n_tokens long, quota_tokens long, "
-            "epochs_milli long, capped boolean",
-        )
-    cells = (
-        spark.read.parquet(f"{state_dir}/epoch")
-        .groupBy("source")
-        .agg(
+    return EPOCH_STATE.assemble(spark, state_dir, lambda p: epoch_schedule_report(
+        p["epoch"].groupBy("source").agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             F.sum("n_tokens").cast("long").alias("n_tokens"),
         )
-    )
-    return epoch_schedule_report(cells)
+    ))
 
 
-def ldiv_state_batch(
-    batch_docs: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+LDIV_STATE = IncrementalState(
+    ldiv="source string, chars_bucket bigint, lang string, n bigint"
+)
+
+
+def ldiv_state_batch(batch_docs: DataFrame, state_dir: str, batch_id: int = -1) -> None:
     """One micro-batch's l-diversity sensitive-value cells — ADDITIVE
-    state (counts add per (QI, lang) cell), overwrite-idempotent."""
+    state (counts add per (QI, lang) cell)."""
     from ..operators.dataquality import l_diversity_cells
 
-    l_diversity_cells(batch_docs).write.mode("overwrite").parquet(
-        f"{state_dir}/ldiv/batch_id={batch_id}"
-    )
+    LDIV_STATE.write(state_dir, batch_id, ldiv=l_diversity_cells(batch_docs))
 
 
 def incremental_l_diversity(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1975,47 +1650,32 @@ def incremental_l_diversity(spark: SparkSession, state_dir: str) -> DataFrame:
     (`test_incremental_l_diversity_equals_batch`)."""
     from ..operators.dataquality import l_diversity_report
 
-    if not os.path.isdir(f"{state_dir}/ldiv"):
-        return spark.createDataFrame(
-            [],
-            "source string, chars_bucket long, n long, n_langs long",
-        )
-    cells = (
-        spark.read.parquet(f"{state_dir}/ldiv")
+    return LDIV_STATE.assemble(spark, state_dir, lambda p: l_diversity_report(
+        p["ldiv"]
         .groupBy("source", "chars_bucket", "lang")
         .agg(F.sum("n").cast("long").alias("n"))
-    )
-    return l_diversity_report(cells)
+    ))
 
 
 # ------------------------------------------------ streaming k-core (r13)
+KCORE_STATE = IncrementalState(kcore_edges="src string, dst string")
 
 
-def kcore_state_batch(
-    batch_edges: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+def kcore_state_batch(batch_edges: DataFrame, state_dir: str, batch_id: int = -1) -> None:
     """One micro-batch of arriving (src, dst) edges, deduped within the
-    batch and written under a batch_id= partition with the overwrite
-    idempotence contract. Cross-batch duplicates are fine: the read side
-    dedupes the union (k_core() starts with a distinct), so edge
-    re-delivery cannot change the core."""
-    batch_edges.select("src", "dst").distinct().write.mode(
-        "overwrite"
-    ).parquet(f"{state_dir}/kcore_edges/batch_id={batch_id}")
+    batch. Cross-batch duplicates are fine: the read side dedupes the
+    union (k_core() starts with a distinct), so edge re-delivery cannot
+    change the core."""
+    edges = batch_edges.select("src", "dst").distinct()
+    KCORE_STATE.write(state_dir, batch_id, kcore_edges=edges)
 
 
 def attach_kcore_stream(
     stream_edges: DataFrame, state_dir: str, checkpoint: str
 ) -> StreamingQuery:
-    """Wire the edge accumulator onto an edge stream via foreachBatch;
-    read the live k-core with incremental_k_core."""
-    return (
-        stream_edges.writeStream.foreachBatch(
-            lambda df, bid: kcore_state_batch(df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    """Wire the edge accumulator onto an edge stream; read the live
+    k-core with incremental_k_core."""
+    return IncrementalState.attach(stream_edges, checkpoint, kcore_state_batch, state_dir)
 
 
 def incremental_k_core(
@@ -2030,42 +1690,31 @@ def incremental_k_core(
     monotone pytest pins."""
     from ..operators.graph import KC_K, k_core
 
-    if not os.path.isdir(f"{state_dir}/kcore_edges"):
-        return spark.createDataFrame([], "node string, core_deg bigint")
-    edges = spark.read.parquet(f"{state_dir}/kcore_edges").select("src", "dst")
-    return k_core(edges, k=KC_K if k is None else k)
+    return KCORE_STATE.assemble(
+        spark, state_dir, lambda p: k_core(p["kcore_edges"], k=KC_K if k is None else k)
+    )
 
 
 # ------------------------------------------------- streaming PMI (r13)
+PMI_STATE = IncrementalState(pmi_pairs="w1 string, w2 string, n_pair bigint")
 
 
-def pmi_state_batch(
-    batch_docs: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+def pmi_state_batch(batch_docs: DataFrame, state_dir: str, batch_id: int = -1) -> None:
     """One micro-batch's adjacent-bigram pair counts — ADDITIVE state
     (counts add per (w1, w2) cell; unigram counts and the total are
     marginals of the same cells, so NO separate unigram state can drift
-    out of sync), under the batch_id= overwrite idempotence contract."""
+    out of sync)."""
     from ..operators.text_analysis import pmi_pair_counts
 
-    pmi_pair_counts(batch_docs).write.mode("overwrite").parquet(
-        f"{state_dir}/pmi_pairs/batch_id={batch_id}"
-    )
+    PMI_STATE.write(state_dir, batch_id, pmi_pairs=pmi_pair_counts(batch_docs))
 
 
 def attach_pmi_stream(
     stream_docs: DataFrame, state_dir: str, checkpoint: str
 ) -> StreamingQuery:
-    """Wire the pair-count accumulator onto a document stream via
-    foreachBatch; read the live collocation ranking at any time with
-    incremental_pmi."""
-    return (
-        stream_docs.writeStream.foreachBatch(
-            lambda df, bid: pmi_state_batch(df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    """Wire the pair-count accumulator onto a document stream; read the
+    live collocation ranking at any time with incremental_pmi."""
+    return IncrementalState.attach(stream_docs, checkpoint, pmi_state_batch, state_dir)
 
 
 def incremental_pmi(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -2076,15 +1725,6 @@ def incremental_pmi(spark: SparkSession, state_dir: str) -> DataFrame:
     (`test_incremental_pmi_equals_batch`)."""
     from ..operators.text_analysis import pmi_from_pairs
 
-    if not os.path.isdir(f"{state_dir}/pmi_pairs"):
-        return spark.createDataFrame(
-            [],
-            "w1 string, w2 string, n_pair long, n_w1 long, n_w2 long, "
-            "pmi_ratio_ppm long",
-        )
-    pair = (
-        spark.read.parquet(f"{state_dir}/pmi_pairs")
-        .groupBy("w1", "w2")
-        .agg(F.sum("n_pair").alias("n_pair"))
-    )
-    return pmi_from_pairs(pair)
+    return PMI_STATE.assemble(spark, state_dir, lambda p: pmi_from_pairs(
+        p["pmi_pairs"].groupBy("w1", "w2").agg(F.sum("n_pair").alias("n_pair"))
+    ))

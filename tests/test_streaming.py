@@ -2254,17 +2254,22 @@ def test_incremental_states_tolerate_all_empty_batches(spark, tmp_path):
     """An empty micro-batch (quiet trigger) still writes its batch_id
     partition; assembly over ONLY-empty state must not crash: the funnel
     returns its zero-count rows with NULL conversion (the nullif guard —
-    previously an ANSI divide-by-zero), and the sketch assemblies return
-    empty."""
+    previously an ANSI divide-by-zero), the sketch assemblies return
+    empty, and the quality and data-quality reports stay their zero
+    reports (no NULL counters)."""
     from pinterest_data_pipeline218_spark.streaming.pipeline import (
         cm_state_batch,
+        dq_state_batch,
         funnel_state_batch,
         hist_state_batch,
         incremental_cm_top_users,
+        incremental_dq,
         incremental_funnel,
         incremental_hist_quantiles,
         incremental_kmv,
+        incremental_quality_report,
         kmv_state_batch,
+        quality_state_batch,
     )
 
     empty = spark.createDataFrame(
@@ -2282,6 +2287,21 @@ def test_incremental_states_tolerate_all_empty_batches(spark, tmp_path):
     assert incremental_hist_quantiles(spark, h).collect() == []
     cm_state_batch(empty, c, 0)
     assert incremental_cm_top_users(spark, c).collect() == []
+    q, d = str(tmp_path / "q"), str(tmp_path / "d")
+    docs = spark.createDataFrame([], "doc_id long, text string, lang string, source string")
+    bench = spark.createDataFrame([(1, "a benchmark passage")], "doc_id long, text string")
+    quality_state_batch(docs, bench, q, 0)
+    r = incremental_quality_report(spark, q).collect()
+    assert len(r) == 1 and (r[0].n_docs, r[0].n_tokens) == (0, 0)
+    orders = spark.createDataFrame(
+        [],
+        "o_orderkey long, o_custkey long, o_orderstatus string, "
+        "o_totalprice double, o_orderdate timestamp",
+    )
+    dq_state_batch(orders, spark.createDataFrame([], "c_custkey long"), d, 0)
+    checks = incremental_dq(spark, d).collect()
+    assert len(checks) == 6
+    assert all((r.n_violations, r["pass"]) == (0, True) for r in checks)
 
 
 def test_incremental_gapfill_equals_batch(spark, tmp_path):
